@@ -157,6 +157,7 @@ def ensure_input(n_urls: int, discovery: bool = False) -> str:
     manifests embed absolute data paths, so the dir must be built at
     its final location."""
     base = os.environ.get("BENCH_INPUT_CACHE", tempfile.gettempdir())
+    os.makedirs(base, exist_ok=True)
     suffix = "_disc" if discovery else ""
     d = os.path.join(base, f"ycrawl_bench_input_{n_urls}{suffix}")
     marker = os.path.join(d, "_READY")
@@ -190,7 +191,7 @@ def ensure_input(n_urls: int, discovery: bool = False) -> str:
     # getOrCreate would return that same singleton, and stopping it
     # here would kill the caller's SparkContext mid-bench.
     own_session = SparkSession.getActiveSession() is None
-    spark = get_spark(cores=32, shuffle_partitions=32, app_name="bench_setup")
+    spark = get_spark(app_name="bench_setup")  # cores: SPARK_GRAFT_CPUS or nproc
     try:
         shutil.rmtree(d, ignore_errors=True)
         cat = Catalog(d)

@@ -57,13 +57,31 @@ def test_payload_invariants(spark, crawl_run):
     assert parsed.groupBy("key", "epoch").count().filter("count > 1").count() == 0
 
 
-def test_resume_determinism(spark, tmp_path_factory, crawl_run):
+def _forbid_bloom(monkeypatch):
+    """Make every Bloom build and probe raise: an incremental re-entry
+    must test membership with the exact state join alone."""
+    from ycrawl_spark import seen
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("incremental re-entry touched a Bloom filter")
+
+    for name in ("add_keys_to_bloom", "build_sharded_bloom",
+                 "sharded_maybe_tag"):
+        monkeypatch.setattr(seen, name, forbidden)
+
+
+def test_resume_determinism(spark, tmp_path_factory, crawl_run, monkeypatch):
     wd_full, _ = crawl_run
     wd = str(tmp_path_factory.mktemp("crawl_resume"))
-    # run only 2 epochs, then resume to completion
+    # run only 2 epochs, then resume to completion in two re-entries,
+    # one per bloom_backend, neither of which may touch a Bloom filter
     partial_cfg = CrawlConfig(**{**CFG.__dict__, "max_epochs": 2})
     run_crawl(spark, partial_cfg, wd, use_bloom=True)
-    run_crawl(spark, CFG, wd, use_bloom=True, resume=True)
+    _forbid_bloom(monkeypatch)
+    for backend, max_epochs in (("driver", 4), ("sharded", CFG.max_epochs)):
+        cfg = CrawlConfig(**{**CFG.__dict__, "bloom_backend": backend,
+                             "max_epochs": max_epochs})
+        run_crawl(spark, cfg, wd, use_bloom=True, resume=True)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
     assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_full, CFG)
 
@@ -184,10 +202,12 @@ def test_log_compaction_mode_identical(spark, tmp_path_factory, crawl_run):
     assert sum(s.n_selected for s in again) == 0
 
 
-def test_frontier_ingestion_crawls_only_delta(spark, tmp_path_factory):
+def test_frontier_ingestion_crawls_only_delta(spark, tmp_path_factory,
+                                              monkeypatch):
     """Mid-crawl URL discovery: ingest_frontier + resume schedules
     exactly the novel URLs — no refetch of attempted keys, no frontier
-    rewrite; the entry seen-state anti-join does the filtering."""
+    rewrite; the entry seen-state join does the filtering, exactly and
+    without a Bloom filter under either bloom_backend."""
     import pandas as pd
 
     from ycrawl_spark import codecs, synth
@@ -200,20 +220,24 @@ def test_frontier_ingestion_crawls_only_delta(spark, tmp_path_factory):
     log_before = Catalog(wd).table("fetch_log").read(spark).count()
     done0, forf0 = seen_sets(spark, wd, cfg)
 
-    new_urls = spark.createDataFrame(
-        synth.frontier_pdf(cfg, 300, 380), schema=synth.FRONTIER_SCHEMA)
-    new_images = spark.createDataFrame(
-        pd.DataFrame([codecs.make_image_row(synth.image_id_for(i))
-                      for i in range(300, 380)]),
-        schema=synth.IMAGES_SCHEMA)
-    assert ingest_frontier(spark, wd, new_urls, new_images) == 80
-    run_crawl(spark, cfg, wd, use_bloom=True, resume=True)
+    _forbid_bloom(monkeypatch)
+    new_keys: set = set()
+    for backend, lo, hi in (("driver", 300, 340), ("sharded", 340, 380)):
+        new_urls = spark.createDataFrame(
+            synth.frontier_pdf(cfg, lo, hi), schema=synth.FRONTIER_SCHEMA)
+        new_images = spark.createDataFrame(
+            pd.DataFrame([codecs.make_image_row(synth.image_id_for(i))
+                          for i in range(lo, hi)]),
+            schema=synth.IMAGES_SCHEMA)
+        assert ingest_frontier(spark, wd, new_urls, new_images) == hi - lo
+        run_crawl(spark, CrawlConfig(**{**cfg.__dict__, "bloom_backend": backend}),
+                  wd, use_bloom=True, resume=True)
 
-    done1, forf1 = seen_sets(spark, wd, cfg)
-    new_keys = {r["key"]
-                for r in new_urls.filter("robots_ok").select("key").collect()}
-    assert done0 <= done1 and forf0 <= forf1
-    assert (done1 | forf1) - (done0 | forf0) == new_keys
+        done1, forf1 = seen_sets(spark, wd, cfg)
+        new_keys |= {r["key"]
+                     for r in new_urls.filter("robots_ok").select("key").collect()}
+        assert done0 <= done1 and forf0 <= forf1
+        assert (done1 | forf1) - (done0 | forf0) == new_keys
     log = Catalog(wd).table("fetch_log").read(spark)
     assert log.filter(~F.col("key").isin(list(new_keys))).count() == log_before
 

@@ -824,6 +824,12 @@ class Table:
                   if s.epoch is not None]
         return max(epochs) if epochs else None
 
+    def is_empty(self) -> bool:
+        """True when ``read()`` would return None (no main-lineage
+        snapshot), answered from the manifest alone: no DataFrame, so
+        no parquet schema-inference job."""
+        return not self._main_snaps(self.snapshots())
+
     def truncate(self) -> None:
         self._commit([])
 

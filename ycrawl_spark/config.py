@@ -38,27 +38,32 @@ class CrawlConfig:
     # physical plans — equivalence is asserted in tests):
     #   "incremental": the live pending set is carried exactly across
     #     epochs (unselected ∪ retryable errors) — ZERO joins in the
-    #     steady-state loop; the seen-set membership test (bloom-gated
-    #     state join) runs only where membership is actually unknown:
-    #     resume entry and frontier re-generation/ingestion.
+    #     steady-state loop; the seen-set membership test runs once per
+    #     (re)entry, where membership is actually unknown (resume and
+    #     ingested frontier rows), as the exact state join: a filter
+    #     probed once would cost more than the shuffle it saves.
     #   "regenerate": reference mechanics (Coordinator/main.py:65-68
     #     rebuilds the todo list from the seen scan every tick) — the
     #     full pending set re-joins the compacted seen state every
-    #     epoch, Bloom-prefiltered once the state outgrows broadcast.
+    #     epoch, Bloom-prefiltered once the state reaches
+    #     bloom_min_items.
     frontier_mode: str = "incremental"
 
-    # Seen-set Bloom gating: the Bloom prefilter pays for itself only
-    # once the attempted-key set is large enough that shuffling it into
-    # the state join dominates the build+broadcast cost. Below the
-    # threshold the exact join runs alone (same results either way —
-    # tests force the Bloom path with bloom_min_items=0).
+    # Seen-set Bloom gating, regenerate mode only (the one mode that
+    # keeps a filter current per epoch and probes it every epoch;
+    # incremental re-entry always takes the exact join). The prefilter
+    # pays for itself only once the attempted-key set is large enough
+    # that shuffling it into the state join dominates the build+probe
+    # cost. Below the threshold the exact join runs alone (same results
+    # either way — tests force the Bloom path with bloom_min_items=0).
     # Below ~1M attempted keys the state side still broadcast-joins
     # (tens of MB), so the exact join wins outright; beyond it the
     # Bloom gates the shuffled join down to maybe-hits only.
     bloom_min_items: int = 1_000_000
 
-    # Bloom backend: "driver" holds one bitset on the driver and
-    # broadcasts it per epoch — right for any filter that fits a
+    # Bloom backend of regenerate mode's per-epoch gate (incremental
+    # mode builds no filter): "driver" holds one bitset on the driver
+    # and broadcasts it per epoch — right for any filter that fits a
     # broadcast. "sharded" keys the filter by xxhash64(key) % n_shards
     # and tests membership via a cogrouped applyInPandas, so a task
     # only ever holds its shard's bits (total/n_shards) — the 10^10-key

@@ -106,52 +106,40 @@ def _agg_from_log(log: DataFrame) -> DataFrame:
 def load_seen_agg(spark: SparkSession, cat: Catalog) -> DataFrame | None:
     """Latest compacted seen-state, reconciled against fetch_log.
 
-    fetch_log remains the source of truth: if the compact snapshot is
-    missing or stale (crash between the log append and the seen_agg
-    replace), it is rebuilt from the log — resume stays deterministic
-    either way.
+    fetch_log remains the source of truth: a ``seen_agg`` snapshot
+    labelled with the log's latest epoch is read back; a missing or
+    stale one is derived from the log and NOT written back. Incremental
+    mode never persists the snapshot (every re-entry would find it
+    stale again), and the caller localCheckpoints the result anyway;
+    regenerate mode persists its own state on its cadence and at exit.
+    Resume stays deterministic either way.
     """
     log_t, agg_t = cat.table("fetch_log"), cat.table("seen_agg")
     last_log = log_t.latest_epoch()
     if last_log is None:
         return None
     if agg_t.latest_epoch() != last_log:
-        agg_t.replace(_agg_from_log(log_t.read(spark)), epoch=last_log)
+        return _agg_from_log(log_t.read(spark))
     return agg_t.read(spark)
 
 
-def seen_state(seen_agg: DataFrame | None, cfg: CrawlConfig):
-    """(excluded_keys_df, attempts_df) from the compacted seen_agg.
-
-    excluded = done ∪ forfeit; attempts = (key, err_count) for keys
-    still retryable.
-    """
-    if seen_agg is None:
-        return None, None
-    excluded = seen_agg.filter(
-        (F.col("done") == 1) | (F.col("err_count") >= cfg.max_retry)
-    ).select("key")
-    attempts = seen_agg.filter(
-        (F.col("done") == 0) & (F.col("err_count") < cfg.max_retry)
-    ).select("key", "err_count")
-    return excluded, attempts
-
-
 def apply_seen_state(pending: DataFrame, seen_agg: DataFrame | None,
-                     cfg: CrawlConfig, spark: SparkSession,
-                     use_bloom: bool, n_seen_hint: int,
+                     cfg: CrawlConfig, n_seen_hint: int,
                      bloom: seen_mod.Bloom | None = None,
                      shards: DataFrame | None = None) -> DataFrame:
     """THE URL-seen membership test: attach crawl state to frontier rows
-    and drop done/forfeited ones. Bloom-gated (definitely-unseen rows
-    bypass the join; maybe-hits take the exact check) once the state
-    outgrows broadcast. Runs per epoch in "regenerate" mode; at resume
-    entry and frontier ingestion in "incremental" mode. With a sharded
-    filter (cfg.bloom_backend="sharded") the gate is the partitioned
-    Bloom — no filter broadcast, tasks hold one shard's bits each."""
+    and drop done/forfeited ones, by an exact left join against the
+    state (broadcast-hinted up to cfg.state_broadcast_max). Incremental
+    mode runs it once per (re)entry with no filter: a Bloom probed once
+    costs an O(seen) build plus a Python-UDF pass over every frontier
+    row, to save only the shuffle of the definitely-new rows.
+    Regenerate mode runs it every epoch with the filter it keeps current
+    (``bloom`` on the driver, or the partitioned ``shards``), which gates
+    the join once the state reaches cfg.bloom_min_items: definitely-
+    unseen rows bypass it, maybe-hits take the exact check."""
     if seen_agg is None:
         return pending.withColumn("err_count", F.lit(0).cast("long"))
-    gated = use_bloom and n_seen_hint >= max(cfg.bloom_min_items, 1)
+    gated = n_seen_hint >= max(cfg.bloom_min_items, 1)
     broadcast_state = n_seen_hint <= cfg.state_broadcast_max
     if gated and shards is not None:
         out = seen_mod.join_seen_state_sharded(
@@ -160,7 +148,7 @@ def apply_seen_state(pending: DataFrame, seen_agg: DataFrame | None,
         )
     else:
         out = seen_mod.join_seen_state(
-            pending, seen_agg, "key", bloom if gated else None, spark,
+            pending, seen_agg, "key", bloom if gated else None,
             broadcast_state=broadcast_state,
         )
     return out.filter(
@@ -387,10 +375,10 @@ def rebuild_discovered_frontier(spark: SparkSession, cat: Catalog,
     fetch_log append and the frontier append loses nothing — re-derive
     every discovered row from the log and append the ones the frontier
     table is missing. Idempotent; returns the number healed."""
-    log = cat.table("fetch_log").read(spark)
-    if log is None or not cfg.discovery_fanout:
+    log_t = cat.table("fetch_log")
+    if not cfg.discovery_fanout or log_t.is_empty():
         return 0
-    ok = log.filter(
+    ok = log_t.read(spark).filter(
         (F.col("status") == "ok") & F.col("depth").isNotNull()
         & (F.col("depth") < cfg.discovery_max_depth)
     ).select("image_id", "depth", "epoch")
@@ -489,8 +477,7 @@ def run_epoch_regenerate(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
     the fresh state equals the full-frontier anti-join result."""
     cand_obs = Observation(f"cand_{epoch}")
     candidates = apply_seen_state(
-        pending.drop("err_count"), seen_agg, cfg, spark, use_bloom,
-        n_seen_hint, bloom, shards,
+        pending.drop("err_count"), seen_agg, cfg, n_seen_hint, bloom, shards,
     ).observe(cand_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
     n_cand = int(cand_obs.get["n"] or 0)
     new_pending = candidates
@@ -554,6 +541,8 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig, workdir: str,
               use_bloom: bool = True, resume: bool = False) -> list[EpochStats]:
     """Full crawl to quiescence (or cfg.max_epochs). Resumable: with
     ``resume=True`` continues after the last committed epoch.
+    ``use_bloom`` turns on regenerate mode's per-epoch Bloom gate;
+    incremental mode's one membership test per entry is always exact.
 
     AQE is switched off for the duration of the loop: every join and
     shuffle here is explicitly sized (broadcast hints, pinned fetch
@@ -576,7 +565,7 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
                      use_bloom: bool, resume: bool) -> list[EpochStats]:
     cat = Catalog(workdir)
     frontier_t = cat.table("frontier")
-    if frontier_t.read(spark) is None:
+    if frontier_t.is_empty():
         # north_rule layout: the frontier lives bucketed by
         # canonicalized-host hash — a hidden bucket(N, canonical_host)
         # partition spec, so host-scoped reads (per-host audits, retry
@@ -596,7 +585,7 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     frontier = frontier_t.read(spark).filter(F.col("robots_ok")).persist()
 
     images_t = cat.table("images")
-    if images_t.read(spark) is None:
+    if images_t.is_empty():
         images_t.append(synth.images_df(spark, cfg), epoch=0)
     # Expected metadata joins onto the frontier ONCE here (bytes pruned
     # at the parquet scan; phash as string — see fetch.REF_COLS) and
@@ -629,51 +618,35 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
         seen_agg = seen_agg.localCheckpoint()
         n_seen_hint = seen_agg.count()
 
-    # Driver-held incremental Bloom over attempted keys: pre-sized once
-    # (~2 attempts/URL), fed O(delta) per epoch in regenerate mode, or
-    # rebuilt once from the compacted state where membership testing
-    # actually happens (resume entry / regenerate loop).
     incremental = cfg.frontier_mode != "regenerate"
-    sharded = cfg.bloom_backend == "sharded"
-    bloom = None
-    shards = None
-    # Incremental mode consults the filter exactly once (resume entry),
-    # and apply_seen_state only gates when n_seen_hint >= bloom_min_items
-    # — so a small-resume O(seen) filter build would be pure waste.
-    # Regenerate mode still builds eagerly: gating can engage mid-crawl
-    # as the seen set grows past the threshold.
-    if use_bloom and (
-        not incremental
-        or (seen_agg is not None
-            and n_seen_hint >= max(cfg.bloom_min_items, 1))
-    ):
-        if sharded:
-            if seen_agg is not None and n_seen_hint > 0:
-                # Resume fast-path: the durable shard table (written at
-                # crawl exit, labelled with fetch_log's latest epoch — the
-                # "bloom shard paths" of the checkpoint manifest) skips
-                # the O(seen) rebuild; stale/missing → rebuild from state.
-                shards_t = cat.table("bloom_shards")
-                if shards_t.latest_epoch() == cat.table("fetch_log").latest_epoch():
-                    shards = shards_t.read(spark).localCheckpoint()
-                else:
-                    shards = seen_mod.build_sharded_bloom(
-                        seen_agg.select("key"), max(2 * cfg.n_urls, 1024),
-                        cfg.bloom_shards,
-                    ).localCheckpoint()
-        else:
-            bloom = seen_mod.Bloom.sized_for(max(2 * cfg.n_urls, 1024))
-            if seen_agg is not None and n_seen_hint > 0:
-                seen_mod.add_keys_to_bloom(bloom, seen_agg.select("key"), "key")
-
-    # The URL-seen membership test at the frontier boundary: in
-    # incremental mode it runs here exactly once per (re)entry — fresh
-    # crawls skip it (state empty), resumes take the bloom-gated join.
+    bloom = shards = None
     if incremental:
-        pending = apply_seen_state(
-            pending, seen_agg, cfg, spark, use_bloom, n_seen_hint, bloom,
-            shards,
-        )
+        # The URL-seen membership test at the frontier boundary: it runs
+        # here exactly once per (re)entry, as the exact state join —
+        # fresh crawls skip it (state empty), and nothing later probes a
+        # filter, so none is built (see apply_seen_state).
+        pending = apply_seen_state(pending, seen_agg, cfg, n_seen_hint)
+    elif use_bloom:
+        # Regenerate mode probes a filter every epoch and feeds it
+        # O(delta) per epoch (pre-sized for ~2 attempts/URL), so it is
+        # built eagerly: gating can engage mid-crawl as the seen set grows.
+        if cfg.bloom_backend != "sharded":
+            bloom = seen_mod.Bloom.sized_for(max(2 * cfg.n_urls, 1024))
+            if n_seen_hint > 0:
+                seen_mod.add_keys_to_bloom(bloom, seen_agg.select("key"), "key")
+        elif n_seen_hint > 0:
+            # Resume fast-path: the durable shard table (written at
+            # crawl exit, labelled with fetch_log's latest epoch — the
+            # "bloom shard paths" of the checkpoint manifest) skips
+            # the O(seen) rebuild; stale/missing → rebuild from state.
+            shards_t = cat.table("bloom_shards")
+            if shards_t.latest_epoch() == cat.table("fetch_log").latest_epoch():
+                shards = shards_t.read(spark).localCheckpoint()
+            else:
+                shards = seen_mod.build_sharded_bloom(
+                    seen_agg.select("key"), max(2 * cfg.n_urls, 1024),
+                    cfg.bloom_shards,
+                ).localCheckpoint()
 
     hot_hosts = scheduler.hot_hosts_of(frontier, cfg)
     # Pending-size estimate drives per-epoch shuffle sizing: tail retry
@@ -717,8 +690,8 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
         # Durable state snapshot every K epochs (resume fast-path). In
         # incremental mode the loop never reads seen_agg, so no snapshot
         # jobs run here — fetch_log is the single source of truth and
-        # load_seen_agg rebuilds the compact state exactly once at the
-        # next (re)entry.
+        # load_seen_agg derives the compact state from it exactly once at
+        # the next (re)entry.
         if not incremental and seen_agg is not None and (
             epoch % cfg.state_compact_every == 0
         ):
@@ -750,11 +723,9 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     ):
         cat.table("seen_agg").replace(seen_agg, epoch=last_log)
     # Durable shard snapshot (the checkpoint's bloom-shard paths): only
-    # in regenerate mode, where the loop keeps shards current with every
-    # delta — incremental-entry shards go stale the moment fetching
-    # starts, and a stale filter persisted as fresh would produce false
-    # negatives (re-crawls) on the next resume.
-    if not incremental and shards is not None and last_log is not None and (
+    # regenerate mode holds shards, and its loop ORs in every delta, so
+    # the snapshot holds every key the log has at last_log.
+    if shards is not None and last_log is not None and (
         cat.table("bloom_shards").latest_epoch() != last_log
     ):
         cat.table("bloom_shards").replace(shards, epoch=last_log)
@@ -774,10 +745,13 @@ def ingest_frontier(spark: SparkSession, workdir: str, urls: DataFrame,
     Appends a frontier snapshot stamped with ``epoch_added`` (defaults
     to the log's latest epoch so provenance survives); the next
     ``run_crawl(..., resume=True)`` re-enters, and the entry-point
-    seen-state anti-join — the ONE place membership is unknown in
-    incremental mode — filters already-attempted keys, so exactly the
-    novel URLs are scheduled. No rewrite of the existing frontier, no
-    state rebuild beyond the entry join the resume pays anyway.
+    seen-state join — the ONE place membership is unknown in incremental
+    mode — filters already-attempted keys, so exactly the novel URLs are
+    scheduled. That join is exact and unfiltered: it runs once, so a
+    Bloom would cost more to build and probe than the shuffle it saves
+    (the Bloom gate lives in regenerate mode, probed every epoch). No
+    rewrite of the existing frontier, no state rebuild beyond the entry
+    join the resume pays anyway.
 
     Returns the number of ingested rows.
     """

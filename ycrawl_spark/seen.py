@@ -106,9 +106,9 @@ def add_keys_to_bloom(bloom: Bloom, keys_df: DataFrame, key_col: str,
 
 def build_bloom(seen_keys: DataFrame, key_col: str, n_items_hint: int, n_shards: int = 32,
                 fpp: float = 0.01) -> Bloom:
-    """Distributed one-shot Bloom build (sized from the hint) — used on
-    resume to reconstruct the filter from existing state; the epoch loop
-    uses ``add_keys_to_bloom`` incrementally."""
+    """Distributed one-shot Bloom build (sized from the hint) over an
+    existing key set; the regenerate-mode epoch loop feeds its filter
+    with ``add_keys_to_bloom`` instead."""
     merged = Bloom.sized_for(max(n_items_hint, 1), fpp)
     add_keys_to_bloom(merged, seen_keys, key_col, n_shards)
     return merged
@@ -146,9 +146,10 @@ def anti_join_unseen(candidates: DataFrame, seen: DataFrame, key_col: str = "key
 
 def join_seen_state(candidates: DataFrame, seen_agg: DataFrame,
                     key_col: str = "key", bloom: Bloom | None = None,
-                    spark=None, broadcast_state: bool = False) -> DataFrame:
+                    broadcast_state: bool = False) -> DataFrame:
     """Attach crawl state (done, err_count) from the compacted seen_agg
-    to every candidate in ONE equi-join, bloom-gated.
+    to every candidate in ONE equi-join, bloom-gated when a ``bloom``
+    is given (exact left join otherwise).
 
     The Bloom filter is built over *attempted* keys (any fetch_log row).
     Definite-new candidates bypass the join entirely and get
@@ -176,7 +177,7 @@ def join_seen_state(candidates: DataFrame, seen_agg: DataFrame,
     if bloom is None:
         return _fill(candidates.join(state, key_col, "left"))
 
-    bc = (spark or candidates.sparkSession).sparkContext.broadcast(
+    bc = candidates.sparkSession.sparkContext.broadcast(
         (bloom.m, bloom.k, bloom.to_bytes())
     )
 

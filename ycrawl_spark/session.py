@@ -25,7 +25,7 @@ def get_spark(
     spark-submit; locally ``cores`` picks ``local[N]``.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
