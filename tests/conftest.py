@@ -7,6 +7,6 @@ from ycrawl_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, app_name="ycrawl_tests", shuffle_partitions=8, driver_memory="8g")
+    s = get_spark(app_name="ycrawl_tests", shuffle_partitions=8, driver_memory="8g")
     yield s
     s.stop()

@@ -5,7 +5,11 @@ sink_checkpoint_meta; Iceberg-equivalent behavior per §7)."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pandas as pd
+import pytest
 
 from ycrawl_spark.catalog import Catalog
 
@@ -560,22 +564,171 @@ def test_branch_drop_discards_staged_data(spark, tmp_path):
         pass
 
 
-def test_branch_protects_fork_lineage_from_expiry_and_compaction(spark, tmp_path):
-    """Maintenance interplay: while a branch is staged, expiry never
-    drops its fork ancestry or staged snapshots, and compaction defers
-    entirely; after publish both work again."""
+def _race_into_lock(t, racer):
+    """Run ``racer()`` once, just before ``t``'s next manifest-lock
+    acquisition — between a commit path's data write and its swap."""
+    orig_lock = t._manifest_lock
+
+    def lock_after_race():
+        racer()
+        t._manifest_lock = orig_lock  # fire once
+        return orig_lock()
+
+    t._manifest_lock = lock_after_race
+
+
+def _ids(df) -> set:
+    return {r["id"] for r in df.collect()}
+
+
+def _on_disk(t) -> set:
+    return set(glob.glob(os.path.join(t.path, "data", "*")))
+
+
+def _live(t) -> set:
+    return {p for s in t.snapshots() for p in s.files}
+
+
+def test_replace_and_merge_refuse_to_drop_fork_lineage(spark, tmp_path):
+    """replace and merge_upsert would supersede the fork snapshot of a
+    staged branch: replace raises naming the branch, merge_upsert
+    returns None, and the audit read keeps working."""
+    t = Catalog(str(tmp_path)).table("pairs")
+    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
+    t.create_branch("audit")
+    t.write_branch("audit", spark.createDataFrame([(2,)], "id long"), epoch=2)
+
+    with pytest.raises(ValueError, match="audit"):
+        t.replace(spark.createDataFrame([(9,)], "id long"), epoch=3)
+    assert t.merge_upsert(
+        spark, spark.createDataFrame([(1,)], "id long"), key="id") is None
+    assert _ids(t.read(spark, branch="audit")) == {1, 2}
+    assert _ids(t.read(spark)) == {1}
+    assert _on_disk(t) == _live(t)  # refused writes GC'd their dirs
+
+
+def test_merge_upsert_epoch_default_ignores_staged_branch(spark, tmp_path):
+    """The merge's default epoch comes from the main lineage: a staged
+    epoch-9 branch must not move main ``latest_epoch`` off 1, and the
+    staged snapshot survives the rewrite."""
+    t = Catalog(str(tmp_path)).table("corpus")
+    t.create_branch("audit")  # forked off the empty table
+    t.write_branch("audit", spark.createDataFrame([(9,)], "id long"), epoch=9)
+    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
+
+    assert t.merge_upsert(
+        spark, spark.createDataFrame([(2,)], "id long"), key="id") is not None
+    assert t.latest_epoch() == 1
+    assert _ids(t.read(spark)) == {1, 2}
+    assert _ids(t.read(spark, branch="audit")) == {9}
+
+
+def test_merge_upsert_cas_ignores_concurrent_branch_write(spark, tmp_path):
+    """The merge CAS compares main-lineage snapshots only: a branch
+    commit racing into the lock is not a conflict, and it survives."""
+    cat = Catalog(str(tmp_path))
+    t = cat.table("corpus")
+    t.create_branch("audit")
+    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
+
+    _race_into_lock(t, lambda: cat.table("corpus").write_branch(
+        "audit", spark.createDataFrame([(7,)], "id long"), epoch=2))
+    assert t.merge_upsert(
+        spark, spark.createDataFrame([(2,)], "id long"), key="id") is not None
+    assert _ids(t.read(spark)) == {1, 2}
+    assert _ids(t.read(spark, branch="audit")) == {7}
+
+
+def test_write_branch_rechecks_ref_inside_lock(spark, tmp_path):
+    """A branch dropped between write_branch's data write and its commit
+    must not leave an orphan snapshot behind — a later compact would
+    fold its unaudited rows into main."""
+    cat = Catalog(str(tmp_path))
+    t = cat.table("pairs")
+    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
+    t.create_branch("audit")
+
+    _race_into_lock(t, lambda: cat.table("pairs").drop_branch("audit"))
+    with pytest.raises(ValueError, match="audit"):
+        t.write_branch("audit", spark.createDataFrame([(7,)], "id long"))
+    assert len(t.snapshots()) == 1
+    assert _on_disk(t) == _live(t)  # the staged dir was GC'd
+    assert t.compact(spark, min_snapshots=1) is not None
+    assert sorted(_ids(t.read(spark))) == [1]
+
+
+def test_truncate_commits_under_lock_and_gcs_data(spark, tmp_path):
+    """truncate is a swap like any other: it takes the manifest lock
+    and deletes the data dirs of the snapshots it drops."""
+    t = Catalog(str(tmp_path)).table("tmp")
+    for e in (1, 2):
+        t.append(spark.createDataFrame([(e,)], "id long"), epoch=e)
+    fired = []
+    _race_into_lock(t, lambda: fired.append(True))
+    t.truncate()
+    assert fired == [True]
+    assert t.read(spark) is None
+    assert _on_disk(t) == set()
+
+
+def test_compact_folds_main_tail_and_carries_branches(spark, tmp_path):
+    """With a staged branch forked mid-lineage, compaction folds only
+    the main snapshots after the fork; the fork lineage and the staged
+    snapshot stay untouched, so both reads keep their rows."""
+    t = Catalog(str(tmp_path)).table("log")
+    for e in (1, 2):
+        t.append(spark.createDataFrame([(e,)], "id long"), epoch=e)
+    t.create_branch("audit")
+    t.write_branch("audit", spark.createDataFrame([(5,)], "id long"), epoch=5)
+    for e in (3, 4):
+        t.append(spark.createDataFrame([(e,)], "id long"), epoch=e)
+
+    assert t.compact(spark) is not None
+    assert [s.meta.get("compacted_from") for s in t.snapshots()] == [
+        None, None, None, 2]
+    assert t.latest_epoch() == 4
+    assert _ids(t.read(spark)) == {1, 2, 3, 4}
+    assert _ids(t.read(spark, branch="audit")) == {1, 2, 5}
+    assert _on_disk(t) == _live(t)
+
+
+_REWRITES = {
+    "replace": lambda t, spark, fork: t.replace(
+        spark.createDataFrame([(9,)], "id int"), epoch=9),
+    "merge_upsert": lambda t, spark, fork: t.merge_upsert(
+        spark, spark.createDataFrame([(9,)], "id int"), key="id"),
+    "compact": lambda t, spark, fork: t.compact(spark),
+    "materialize_merges": lambda t, spark, fork: t.materialize_merges(
+        spark, key="id"),
+    "rollback": lambda t, spark, fork: t.rollback(fork),
+    "expire_snapshots": lambda t, spark, fork: t.expire_snapshots(keep_last=1),
+}
+
+
+@pytest.mark.parametrize("rewrite", sorted(_REWRITES))
+def test_rewrite_keeps_staged_branch(spark, tmp_path, rewrite):
+    """Every rewrite keeps a staged branch whole: its fork lineage sits
+    at the main head, so each rewrite must refuse — a ValueError naming
+    the branch, or a no-op result — and the audit read, the publish and
+    post-publish maintenance all still work."""
     t = Catalog(str(tmp_path)).table("log")
     for e in range(1, 5):
         t.append(spark.createDataFrame([(e,)], "id int"), epoch=e)
-    t.create_branch("audit")
-    t.write_branch("audit", spark.createDataFrame([(5,)], "id int"), epoch=5)
+    fork = t.create_branch("audit")
+    staged = t.write_branch("audit", spark.createDataFrame([(5,)], "id int"),
+                            epoch=5)
+    live_before = _live(t)
 
-    assert t.expire_snapshots(keep_last=1) == []  # all protected by fork
-    assert t.compact(spark) is None  # deferred while staged
-    assert {r["id"] for r in t.read(spark, branch="audit").collect()} == {
-        1, 2, 3, 4, 5}
+    try:
+        assert _REWRITES[rewrite](t, spark, fork) in (None, [])
+    except ValueError as e:
+        assert "audit" in str(e)
+    assert _live(t) == live_before == _on_disk(t)
+    assert _ids(t.read(spark)) == {1, 2, 3, 4}
+    assert _ids(t.read(spark, branch="audit")) == {1, 2, 3, 4, 5}
 
-    t.publish_branch("audit")
+    assert t.publish_branch("audit") == [staged]
+    assert _ids(t.read(spark)) == {1, 2, 3, 4, 5}
     assert len(t.expire_snapshots(keep_last=2)) == 3
-    assert {r["id"] for r in t.read(spark).collect()} == {4, 5}
+    assert _ids(t.read(spark)) == {4, 5}
     assert t.latest_epoch() == 5

@@ -2,13 +2,32 @@
 
 No Iceberg runtime jar ships in this container, so this thin facade
 provides the same *semantics* over partitioned parquet + a JSON
-manifest: atomic append commits, snapshot ids, time travel by
-snapshot, and partition layout. On a real cluster the same call sites
-swap to ``df.writeTo(name).append()`` — the pipeline only uses this
-narrow API.
+manifest: atomic commits, snapshot ids, time travel by snapshot,
+partition layout and write-audit-publish branches. On a real cluster
+the same call sites swap to ``df.writeTo(name).append()`` — the
+pipeline only uses this narrow API.
+
+Every commit goes through two private primitives:
+
+- ``Table._write`` is the only Spark write. It lays a DataFrame out in
+  ``data/<snapshot_id>`` under the table's current partition spec and
+  records that spec on the snapshot. ``append_pdf`` alone writes
+  through pyarrow, so a tiny driver-side frame launches no Spark job.
+- ``Table._swap`` is the only place the manifest changes. Under the
+  manifest lock it re-reads the manifest and the refs, computes the
+  main lineage and the ref-reachable set once, lets the caller's
+  rewrite build the new snapshot list (CAS bases and default epochs
+  come from the main lineage only), commits, and then deletes the data
+  dirs of exactly the snapshots it dropped.
+
+The ref-protection rule lives in ``_swap`` alone: a snapshot is
+ref-reachable when a live branch staged it or when it lies on the main
+lineage at or below a live branch's fork point, and no commit may drop
+one. A commit that would is refused (``ValueError`` naming the branch,
+or ``None`` from the CAS-style rewrites ``compact``/``merge_upsert``).
 
 Reference analog for the manifest: the crawl's completion checkpoint
-``0_meta_on_completion.json`` (/root/reference/Frontend/functions.py:17-35),
+``0_meta_on_completion.json`` (reference Frontend/functions.py:17-35),
 generalized to per-commit snapshots.
 """
 
@@ -17,11 +36,14 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import shutil
+import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 
 @dataclass
@@ -31,6 +53,22 @@ class Snapshot:
     epoch: int | None
     files: list[str]
     meta: dict
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  parts)
+
+
+def _gc(snaps: list[Snapshot]) -> None:
+    """Best-effort delete of data dirs no manifest references."""
+    for s in snaps:
+        for d in s.files:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def _max_epoch(snaps: list[Snapshot]) -> int | None:
+    return max((s.epoch for s in snaps if s.epoch is not None), default=None)
 
 
 class Table:
@@ -52,7 +90,8 @@ class Table:
     def _commit(self, snaps: list[Snapshot]) -> None:
         tmp = self._manifest + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump([s.__dict__ for s in snaps], f)
+            json.dump([dict(s.__dict__, sequence=i)
+                       for i, s in enumerate(snaps)], f)
         os.replace(tmp, self._manifest)  # atomic on POSIX
 
     @contextmanager
@@ -94,9 +133,41 @@ class Table:
             json.dump(refs, f)
         os.replace(tmp, self._refs_file)
 
+    def _ref(self, refs: dict, name: str) -> dict:
+        if name not in refs:
+            raise ValueError(f"no branch {name!r} on table {self.name!r}")
+        return refs[name]
+
     @staticmethod
     def _main_snaps(snaps: list[Snapshot]) -> list[Snapshot]:
         return [s for s in snaps if not s.meta.get("branch")]
+
+    @staticmethod
+    def _staged(snaps: list[Snapshot], branch: str | None = None) -> list[Snapshot]:
+        """Branch-tagged snapshots (of ``branch``, or of any branch)."""
+        return [s for s in snaps if s.meta.get("branch")
+                and branch in (None, s.meta["branch"])]
+
+    @staticmethod
+    def _fork_lineage(main: list[Snapshot],
+                      fork_id: str | None) -> list[Snapshot] | None:
+        """Main lineage up to and including ``fork_id``: [] for a branch
+        forked off an empty table, None once the fork is gone."""
+        if fork_id is None:
+            return []
+        ids = [s.snapshot_id for s in main]
+        return main[: ids.index(fork_id) + 1] if fork_id in ids else None
+
+    def _reach(self, snaps: list[Snapshot], main: list[Snapshot],
+               refs: dict) -> dict[str, list[str]]:
+        """Ref-reachable snapshot id -> the live branches reaching it:
+        each branch's staged snapshots plus main up to its fork."""
+        reach: dict[str, list[str]] = {}
+        for name, ref in refs.items():
+            lineage = self._fork_lineage(main, ref["fork_id"]) or []
+            for s in lineage + self._staged(snaps, name):
+                reach.setdefault(s.snapshot_id, []).append(name)
+        return reach
 
     def _visible_snaps(self, branch: str | None) -> list[Snapshot]:
         """Manifest-ordered snapshots a read on ``branch`` sees: main
@@ -105,24 +176,62 @@ class Table:
         snaps = self.snapshots()
         if branch is None:
             return self._main_snaps(snaps)
-        refs = self.branches()
-        if branch not in refs:
-            raise ValueError(f"no branch {branch!r} on table {self.name!r}")
-        fork_id = refs[branch]["fork_id"]
-        visible: list[Snapshot] = []
-        if fork_id is not None:
-            fork_seen = False
-            for s in self._main_snaps(snaps):
-                visible.append(s)
-                if s.snapshot_id == fork_id:
-                    fork_seen = True
-                    break
-            if not fork_seen:
-                raise ValueError(
-                    f"fork snapshot {fork_id!r} of branch {branch!r} no "
-                    "longer in manifest (rolled back or expired)")
-        visible.extend(s for s in snaps if s.meta.get("branch") == branch)
-        return visible
+        fork_id = self._ref(self.branches(), branch)["fork_id"]
+        lineage = self._fork_lineage(self._main_snaps(snaps), fork_id)
+        if lineage is None:
+            raise ValueError(
+                f"fork snapshot {fork_id!r} of branch {branch!r} no "
+                "longer in manifest (rolled back or expired)")
+        return lineage + self._staged(snaps, branch)
+
+    def _swap(self, rewrite, fresh: Snapshot | None = None,
+              strict: bool = True) -> list[Snapshot] | None:
+        """The one manifest change. Under the lock: re-read the manifest
+        and the refs, compute the main lineage and the ref-reachable set
+        once, and ask ``rewrite(snaps, main, reach, refs)`` for the new
+        snapshot list. The rewrite may pop refs, and returns None to
+        abort (a CAS conflict). ``fresh`` is the snapshot this commit
+        wrote; its dir is deleted whenever the commit does not land.
+
+        Refused: staging ``fresh`` onto a branch that no longer exists,
+        and dropping a snapshot a remaining ref reaches — ValueError
+        naming the branch, or None when ``strict`` is off. Otherwise
+        commit (manifest, then refs) and delete the data dirs of the
+        dropped snapshots AFTER the commit, so a reader sees the old
+        manifest or the new one, never missing files. Returns the
+        dropped snapshots, or None when aborted."""
+        doomed = [fresh] if fresh is not None else []
+        with self._manifest_lock():
+            snaps, refs = self.snapshots(), self.branches()
+            refs_before = dict(refs)
+            main = self._main_snaps(snaps)
+            reach = self._reach(snaps, main, refs)
+            try:
+                if fresh is not None and fresh.meta.get("branch"):
+                    self._ref(refs, fresh.meta["branch"])
+                new = rewrite(snaps, main, reach, refs)
+                kept = {s.snapshot_id for s in new or []}
+                held = [(sid, b) for sid, names in reach.items()
+                        if sid not in kept for b in names if b in refs]
+                if new is not None and held:
+                    if strict:
+                        raise ValueError(
+                            f"snapshot {held[0][0]!r} of table {self.name!r} "
+                            f"is reachable from branch {held[0][1]!r}; "
+                            "publish or drop the branch first")
+                    new = None
+            except BaseException:
+                _gc(doomed)
+                raise
+            if new is None:
+                _gc(doomed)
+                return None
+            self._commit(new)
+            if refs != refs_before:
+                self._commit_refs(refs)
+        dropped = [s for s in snaps if s.snapshot_id not in kept]
+        _gc(dropped)
+        return dropped
 
     def create_branch(self, name: str) -> str | None:
         """Open a staging branch forked at the current main head
@@ -146,9 +255,10 @@ class Table:
         invisible to main readers (and to ``latest_epoch``/``scan``/
         merge-on-read resolution) until published, so a bad batch never
         taints the serving table: audit it with ``read(branch=...)``,
-        then ``publish_branch`` or ``drop_branch``."""
-        if name not in self.branches():
-            raise ValueError(f"no branch {name!r} on table {self.name!r}")
+        then ``publish_branch`` or ``drop_branch``. The ref is checked
+        here and again inside the commit lock, so a branch dropped
+        mid-write raises instead of leaving an orphan snapshot."""
+        self._ref(self.branches(), name)
         return self.append(df, epoch=epoch,
                            meta=dict(meta or {}, branch=name))
 
@@ -161,126 +271,89 @@ class Table:
         snapshots join the main lineage in commit order (their epochs
         now advance ``latest_epoch``) and the ref is dropped. Returns
         the published snapshot ids."""
-        with self._manifest_lock():
-            refs = self.branches()
-            if name not in refs:
-                raise ValueError(f"no branch {name!r} on table {self.name!r}")
-            fork_id = refs[name]["fork_id"]
-            snaps = self.snapshots()
-            main_ids = [s.snapshot_id for s in self._main_snaps(snaps)]
-            head = main_ids[-1] if main_ids else None
+        published: list[str] = []
+
+        def rewrite(snaps, main, _reach, refs):
+            fork_id = self._ref(refs, name)["fork_id"]
+            head = main[-1].snapshot_id if main else None
             if head != fork_id:
                 raise ValueError(
                     f"cannot fast-forward branch {name!r}: main advanced "
                     f"past fork {fork_id!r} (head {head!r}); re-stage "
                     "against the new head")
-            published = []
-            out = []
-            for i, s in enumerate(snaps):
-                m = dict(s.meta)
-                if m.get("branch") == name:
-                    m.pop("branch")
-                    m["published_from"] = name
-                    published.append(s.snapshot_id)
-                out.append(Snapshot(snapshot_id=s.snapshot_id, sequence=i,
-                                    epoch=s.epoch, files=s.files, meta=m))
-            self._commit(out)
             refs.pop(name)
-            self._commit_refs(refs)
+            out = []
+            for s in snaps:
+                if s.meta.get("branch") == name:
+                    meta = {k: v for k, v in s.meta.items() if k != "branch"}
+                    s = Snapshot(s.snapshot_id, s.sequence, s.epoch, s.files,
+                                 dict(meta, published_from=name))
+                    published.append(s.snapshot_id)
+                out.append(s)
+            return out
+
+        self._swap(rewrite)
         return published
 
     def drop_branch(self, name: str) -> list[str]:
         """Abort a staged branch — the reject path of the audit gate.
-        Removes the ref and the branch's snapshots from the manifest,
-        then deletes their data dirs (after the commit, so a concurrent
-        branch reader races manifest-old-or-new, never missing files).
-        Main lineage is untouched. Returns the dropped snapshot ids."""
-        import shutil
+        Removes the ref and the branch's snapshots from the manifest
+        and deletes their data dirs; main lineage is untouched. Returns
+        the dropped snapshot ids."""
 
-        with self._manifest_lock():
-            refs = self.branches()
-            if name not in refs:
-                raise ValueError(f"no branch {name!r} on table {self.name!r}")
-            snaps = self.snapshots()
-            doomed = [s for s in snaps if s.meta.get("branch") == name]
-            kept = [s for s in snaps if s.meta.get("branch") != name]
-            self._commit([
-                Snapshot(snapshot_id=s.snapshot_id, sequence=i,
-                         epoch=s.epoch, files=s.files, meta=s.meta)
-                for i, s in enumerate(kept)
-            ])
+        def rewrite(snaps, _main, _reach, refs):
+            self._ref(refs, name)
             refs.pop(name)
-            self._commit_refs(refs)
-        for s in doomed:
-            for d in s.files:
-                shutil.rmtree(d, ignore_errors=True)
-        return [s.snapshot_id for s in doomed]
+            return [s for s in snaps if s.meta.get("branch") != name]
+
+        return [s.snapshot_id for s in self._swap(rewrite)]
+
+    # -- writes. Each one is ``_write`` (or the pyarrow write of
+    # ``append_pdf``) followed by one ``_swap``.
+
+    def _fresh(self, epoch: int | None, meta: dict | None) -> Snapshot:
+        sid = uuid.uuid4().hex[:16]
+        return Snapshot(sid, 0, epoch, [os.path.join(self.path, "data", sid)],
+                        dict(meta or {}))
+
+    def _write(self, df: DataFrame, epoch: int | None = None,
+               meta: dict | None = None) -> Snapshot:
+        """The one Spark write: ``df`` → ``data/<snapshot_id>`` laid out
+        under the table's CURRENT spec. The writer derives the hidden
+        partition columns and partitionBy's them, and the spec is
+        recorded in ``meta['spec']`` so reads interpret this snapshot's
+        own layout (partition evolution). Nothing is committed."""
+        snap = self._fresh(epoch, meta)
+        spec = self.partition_spec()
+        derived = self._derived(spec)
+        for name, expr in derived:
+            df = df.withColumn(name, expr)
+        writer = df.write.mode("overwrite")
+        if spec:
+            snap.meta["spec"] = [list(t) for t in spec]
+            writer = writer.partitionBy(*[name for name, _ in derived])
+        writer.parquet(snap.files[0])
+        return snap
 
     def append(self, df: DataFrame, epoch: int | None = None,
-               meta: dict | None = None, partition_by: list[str] | None = None) -> str:
-        """Write df as a new snapshot; commit = atomic manifest swap.
-        Under a partition spec (``set_partition_spec``) the writer
-        derives and lays out the hidden partition columns; the spec
-        used is recorded per snapshot (partition evolution)."""
-        snap_id = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(self.path, "data", snap_id)
-        spec = self.partition_spec() if not partition_by else []
-        if spec:
-            for name, expr in self._derived(spec):
-                df = df.withColumn(name, expr)
-            partition_by = [name for name, _ in self._derived(spec)]
-            meta = dict(meta or {}, spec=[list(t) for t in spec])
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        with self._manifest_lock():
-            snaps = self.snapshots()
-            snaps.append(
-                Snapshot(
-                    snapshot_id=snap_id,
-                    sequence=len(snaps),
-                    epoch=epoch,
-                    files=[data_dir],
-                    meta=meta or {},
-                )
-            )
-            self._commit(snaps)
-        return snap_id
+               meta: dict | None = None) -> str:
+        """Write df as a new snapshot; commit = atomic manifest swap."""
+        snap = self._write(df, epoch, meta)
+        self._swap(lambda snaps, *_: snaps + [snap], snap)
+        return snap.snapshot_id
 
     def replace(self, df: DataFrame, epoch: int | None = None,
                 meta: dict | None = None) -> str:
-        """Write df as the table's ONLY snapshot (Iceberg
-        ``createOrReplace`` semantics) and garbage-collect data files of
-        superseded snapshots after the commit. Used for compacted state
-        tables (e.g. ``seen_agg``) rewritten every epoch.
-
-        Applies the table's current partition spec exactly like
-        ``append`` (derive hidden columns, partitionBy, record
-        ``meta['spec']``) — a spec'd table maintained via replace()
-        keeps its partition pruning (ADVICE r03 #2)."""
-        import shutil
-
-        snap_id = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(self.path, "data", snap_id)
-        spec = self.partition_spec()
-        writer = df.write.mode("overwrite")
-        if spec:
-            for name, expr in self._derived(spec):
-                df = df.withColumn(name, expr)
-            writer = df.write.mode("overwrite").partitionBy(
-                *[name for name, _ in self._derived(spec)])
-            meta = dict(meta or {}, spec=[list(t) for t in spec])
-        writer.parquet(data_dir)
-        with self._manifest_lock():
-            old_dirs = [p for s in self.snapshots() for p in s.files]
-            self._commit([
-                Snapshot(snapshot_id=snap_id, sequence=0, epoch=epoch,
-                         files=[data_dir], meta=meta or {})
-            ])
-        for d in old_dirs:  # best-effort GC; manifest no longer references them
-            shutil.rmtree(d, ignore_errors=True)
-        return snap_id
+        """Write df as the ONLY main-lineage snapshot (Iceberg
+        ``createOrReplace`` semantics) and garbage-collect the data of
+        the superseded snapshots after the commit. Used for compacted
+        state tables (e.g. ``seen_agg``) rewritten every epoch. Staged
+        branch snapshots are carried through; a live branch's fork
+        lineage cannot be superseded, so replace raises ValueError
+        while one is staged on a non-empty fork."""
+        snap = self._write(df, epoch, meta)
+        self._swap(lambda snaps, *_: [snap] + self._staged(snaps), snap)
+        return snap.snapshot_id
 
     def merge_upsert(self, spark: SparkSession, source: DataFrame,
                      key: str | list[str], epoch: int | None = None,
@@ -295,55 +368,35 @@ class Table:
 
         Shape: one left_anti join of the target against the source's
         key set (broadcast when small) keeps the untouched mass, the
-        union with the source is the new table state, laid out under
+        union with the source is the new main lineage, laid out under
         the current partition spec. The commit is CAS-guarded: the
-        merge was computed against the base snapshot set, so ANY
-        concurrent commit (append/replace/compact/merge) invalidates
-        it — abort, return None, caller retries against the new
-        manifest (Iceberg's serializable MERGE conflict behavior).
-        Superseded data dirs are GC'd only after the commit."""
-        import shutil
-
-        snaps = self.snapshots()
-        base_ids = {s.snapshot_id for s in snaps}
+        merge was computed against the base main lineage, so ANY
+        concurrent main commit (append/replace/compact/merge/publish)
+        invalidates it — abort, return None, caller retries against the
+        new manifest (Iceberg's serializable MERGE conflict behavior).
+        Staged branches are carried through; a merge that would
+        supersede a live fork returns None as well."""
+        main = self._main_snaps(self.snapshots())
+        base = [s.snapshot_id for s in main]
         keys = [key] if isinstance(key, str) else list(key)
         target = self.read(spark)
-        if target is None:
-            merged = source
-        elif delete_missing:
+        if target is None or delete_missing:
             merged = source
         else:
             kept = target.join(
                 source.select(*keys).distinct(), keys, "left_anti")
             merged = kept.unionByName(source)
-        snap_id = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(self.path, "data", snap_id)
-        spec = self.partition_spec()
-        meta: dict = {"merge_keys": keys, "merge_base": len(snaps)}
-        writer = merged.write.mode("overwrite")
-        if spec:
-            for name, expr in self._derived(spec):
-                merged = merged.withColumn(name, expr)
-            writer = merged.write.mode("overwrite").partitionBy(
-                *[name for name, _ in self._derived(spec)])
-            meta["spec"] = [list(t) for t in spec]
-        writer.parquet(data_dir)
-        epochs = [s.epoch for s in snaps if s.epoch is not None]
-        if epoch is None and epochs:
-            epoch = max(epochs)
-        with self._manifest_lock():
-            current = {s.snapshot_id for s in self.snapshots()}
-            if current != base_ids:
-                shutil.rmtree(data_dir, ignore_errors=True)
+        snap = self._write(merged, _max_epoch(main) if epoch is None else epoch,
+                           {"merge_keys": keys, "merge_base": len(main)})
+
+        def rewrite(snaps, cur_main, *_):
+            if [s.snapshot_id for s in cur_main] != base:
                 return None
-            old_dirs = [p for s in snaps for p in s.files]
-            self._commit([
-                Snapshot(snapshot_id=snap_id, sequence=0, epoch=epoch,
-                         files=[data_dir], meta=meta)
-            ])
-        for d in old_dirs:  # best-effort GC; manifest no longer references them
-            shutil.rmtree(d, ignore_errors=True)
-        return snap_id
+            return [snap] + self._staged(snaps)
+
+        if self._swap(rewrite, snap, strict=False) is None:
+            return None
+        return snap.snapshot_id
 
     def merge_append(self, df: DataFrame, key: str | list,
                      epoch: int | None = None) -> str:
@@ -369,10 +422,6 @@ class Table:
         ``key`` defaults to the most recent snapshot's ``merge_key``
         tag. One window shuffle over base ∪ deltas — the read-side
         cost MOR trades for its O(batch) writes."""
-        from functools import reduce
-
-        from pyspark.sql import Window, functions as F
-
         snaps = self._visible_snaps(None)
         if not snaps:
             return None
@@ -383,15 +432,8 @@ class Table:
                 return self.read(spark)
             key = tagged[-1]
         keys = [key] if isinstance(key, str) else list(key)
-        parts = []
-        for i, s in enumerate(snaps):
-            df = spark.read.option("mergeSchema", "true").parquet(*s.files)
-            spec = [tuple(t) for t in s.meta.get("spec", [])]
-            if spec:
-                df = df.drop(*[name for name, _ in self._derived(spec)])
-            parts.append(df.withColumn("_seq", F.lit(i)))
-        u = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                   parts)
+        u = _union([self._read_one(spark, s).withColumn("_seq", F.lit(i))
+                    for i, s in enumerate(snaps)])
         w = Window.partitionBy(*keys).orderBy(F.desc("_seq"))
         return (
             u.withColumn("_rn", F.row_number().over(w))
@@ -402,15 +444,15 @@ class Table:
     def materialize_merges(self, spark: SparkSession,
                            key: str | list | None = None) -> str | None:
         """Fold accumulated MOR deltas into one resolved snapshot
-        (replace = the MOR analog of compact): read_resolved → replace.
-        Returns the new snapshot id, or None if the table is empty."""
+        (replace = the MOR analog of compact): read_resolved → replace,
+        so it refuses a live fork exactly like ``replace``. Returns the
+        new snapshot id, or None if the table is empty."""
         resolved = self.read_resolved(spark, key)
         if resolved is None:
             return None
-        epochs = [s.epoch for s in self.snapshots() if s.epoch is not None]
         # replace() writes the resolved data BEFORE committing and GCs
         # the superseded dirs only after — the lazy read is safe
-        return self.replace(resolved, epoch=max(epochs) if epochs else None)
+        return self.replace(resolved, epoch=self.latest_epoch())
 
     def append_pdf(self, pdf, epoch: int | None = None,
                    meta: dict | None = None) -> str:
@@ -421,39 +463,25 @@ class Table:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        snap_id = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(self.path, "data", snap_id)
-        os.makedirs(data_dir, exist_ok=True)
+        snap = self._fresh(epoch, meta)
+        os.makedirs(snap.files[0], exist_ok=True)
         pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                       os.path.join(data_dir, "part-0.parquet"))
-        with self._manifest_lock():
-            snaps = self.snapshots()
-            snaps.append(
-                Snapshot(snapshot_id=snap_id, sequence=len(snaps), epoch=epoch,
-                         files=[data_dir], meta=meta or {})
-            )
-            self._commit(snaps)
-        return snap_id
+                       os.path.join(snap.files[0], "part-0.parquet"))
+        self._swap(lambda snaps, *_: snaps + [snap], snap)
+        return snap.snapshot_id
 
     def rollback(self, snapshot_id: str) -> None:
         """Drop one committed snapshot from the manifest and delete its
         data files (Iceberg expire-snapshot analog). The epoch loop uses
         this to un-commit a zero-row append: leaving it would advance
         ``latest_epoch`` (shifting resume numbering) and add a part-
-        file-less dir to every later multi-path read."""
-        import shutil
-
-        with self._manifest_lock():
-            snaps = self.snapshots()
-            keep = [s for s in snaps if s.snapshot_id != snapshot_id]
-            dropped = [s for s in snaps if s.snapshot_id == snapshot_id]
-            self._commit(keep)
-        for s in dropped:
-            for d in s.files:
-                shutil.rmtree(d, ignore_errors=True)
+        file-less dir to every later multi-path read. Raises ValueError
+        for a snapshot a live branch reaches."""
+        self._swap(lambda snaps, *_: [s for s in snaps
+                                      if s.snapshot_id != snapshot_id])
 
     def compact(self, spark: SparkSession, min_snapshots: int = 2) -> str | None:
-        """Rewrite every live snapshot into ONE (Iceberg
+        """Rewrite the main lineage into ONE snapshot (Iceberg
         ``rewrite_data_files`` + ``expire_snapshots`` analog).
 
         A long crawl appends a snapshot per epoch; after 10^3 epochs a
@@ -467,6 +495,15 @@ class Table:
         travel before the compaction point is intentionally expired,
         exactly like ``expire_snapshots``.
 
+        Only main-lineage snapshots no live ref reaches are folded (the
+        main tail after the newest live fork); staged branch snapshots
+        and fork lineages are carried through untouched (Iceberg:
+        rewrite respects ref-reachable snapshots). The CAS guard aborts
+        (None) when a folded snapshot vanished or became ref-reachable
+        before the commit — the rewrite would otherwise RESURRECT or
+        double rows; snapshots APPENDED meanwhile are carried forward
+        (the Iceberg rewrite-retry analog).
+
         Hidden-partition interplay: each base snapshot's DERIVED
         partition columns are dropped before the rewrite (they are
         storage artifacts of that snapshot's spec, not table columns),
@@ -477,76 +514,29 @@ class Table:
         semantics are unchanged.
 
         Returns the new snapshot id, or None if there was nothing to
-        compact (fewer than ``min_snapshots`` live snapshots).
+        compact (fewer than ``min_snapshots`` foldable snapshots).
         """
-        import shutil
-
-        if self.branches():
-            # Compaction folds the whole manifest into one snapshot; a
-            # staged branch's fork ancestry would be collapsed out from
-            # under its audit read. Defer until branches publish/drop
-            # (Iceberg: rewrite respects ref-reachable snapshots).
-            return None
         snaps = self.snapshots()
-        if len(snaps) < min_snapshots:
+        main = self._main_snaps(snaps)
+        reach = self._reach(snaps, main, self.branches())
+        fold = [s for s in main if s.snapshot_id not in reach]
+        if len(fold) < min_snapshots:
             return None
-        base_ids = {s.snapshot_id for s in snaps}
-        old_dirs = [p for s in snaps for p in s.files]
-        epochs = [s.epoch for s in snaps if s.epoch is not None]
-        snap_id = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(self.path, "data", snap_id)
+        data = _union([self._read_one(spark, s) for s in fold])
+        snap = self._write(data, _max_epoch(fold),
+                           {"compacted_from": len(fold)})
+        first, fold_ids = fold[0].snapshot_id, {s.snapshot_id for s in fold}
 
-        from functools import reduce
-
-        parts = []
-        for s in snaps:
-            df = spark.read.parquet(*s.files)
-            spec_s = [tuple(t) for t in s.meta.get("spec", [])]
-            if spec_s:
-                df = df.drop(*[name for name, _ in self._derived(spec_s)])
-            parts.append(df)
-        data = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-        cur_spec = self.partition_spec()
-        meta: dict = {"compacted_from": len(snaps)}
-        writer = data.write.mode("overwrite")
-        if cur_spec:
-            for name, expr in self._derived(cur_spec):
-                data = data.withColumn(name, expr)
-            writer = data.write.mode("overwrite").partitionBy(
-                *[name for name, _ in self._derived(cur_spec)])
-            meta["spec"] = [list(t) for t in cur_spec]
-        writer.parquet(data_dir)
-        with self._manifest_lock():
-            # CAS guard: the rewrite is valid only if every base
-            # snapshot is STILL live at commit time. A concurrent
-            # replace()/rollback()/compact() that removed one means the
-            # rewritten data would RESURRECT rows (or double them, for
-            # a racing compact whose commit landed first) — abort and
-            # let the caller retry against the new manifest, exactly
-            # Iceberg's rewrite-conflict behavior.
-            current = self.snapshots()
-            if not base_ids <= {s.snapshot_id for s in current}:
-                shutil.rmtree(data_dir, ignore_errors=True)
+        def rewrite(cur, *_):
+            if not fold_ids <= {s.snapshot_id for s in cur}:
                 return None
-            # merge-on-commit (the Iceberg rewrite retry analog): carry
-            # forward any snapshot APPENDED since the base read — the
-            # rewrite replaces exactly the base set, never newer data.
-            tail = [s for s in current if s.snapshot_id not in base_ids]
-            merged = [
-                Snapshot(snapshot_id=snap_id, sequence=0,
-                         epoch=max(epochs) if epochs else None,
-                         files=[data_dir],
-                         meta=meta)
-            ] + [
-                Snapshot(snapshot_id=s.snapshot_id, sequence=i + 1,
-                         epoch=s.epoch, files=s.files, meta=s.meta)
-                for i, s in enumerate(tail)
-            ]
-            self._commit(merged)
-        for d in old_dirs:  # best-effort GC; manifest no longer references them
-            shutil.rmtree(d, ignore_errors=True)
-        return snap_id
+            # the compacted snapshot takes the first folded one's place
+            return [snap if s.snapshot_id == first else s for s in cur
+                    if s.snapshot_id == first or s.snapshot_id not in fold_ids]
+
+        if self._swap(rewrite, snap, strict=False) is None:
+            return None
+        return snap.snapshot_id
 
     # -- hidden partitioning / partition evolution (Iceberg transform
     # spec analog). A spec is a list of transforms over SOURCE columns:
@@ -579,8 +569,6 @@ class Table:
     @staticmethod
     def _derived(spec: list[tuple]) -> list[tuple[str, "object"]]:
         """(partition_col_name, Column expr) per spec field."""
-        from pyspark.sql import functions as F
-
         out = []
         for t in spec:
             if t[0] == "identity":
@@ -604,8 +592,6 @@ class Table:
         Ranges prune days/identity; buckets prune equality only (a
         range cannot be projected through a hash, so it stays
         row-level — same rule as Iceberg)."""
-        from pyspark.sql import functions as F
-
         pred = F.lit(True)
         for t in spec:
             if t[0] == "identity" and t[1] in eq:
@@ -630,6 +616,19 @@ class Table:
                     F.xxhash64(F.lit(eq[c]).cast("string")), F.lit(n))
         return pred
 
+    def _read_one(self, spark: SparkSession, s: Snapshot,
+                  eq: dict | None = None, ranges: dict | None = None) -> DataFrame:
+        """One snapshot's rows with its hidden partition columns dropped.
+        With ``eq`` given, ``eq``/``ranges`` first prune partitions
+        through the snapshot's own spec (``scan``)."""
+        df = spark.read.parquet(*s.files)
+        spec = [tuple(t) for t in s.meta.get("spec", [])]
+        if spec:
+            if eq is not None:
+                df = df.filter(self._partition_predicate(spec, eq, ranges or {}))
+            df = df.drop(*[name for name, _ in self._derived(spec)])
+        return df
+
     def scan(self, spark: SparkSession, eq: dict | None = None,
              ranges: dict | None = None) -> DataFrame | None:
         """Read with hidden-partition pruning: predicates are given on
@@ -639,23 +638,12 @@ class Table:
         pruning is a superset prefilter). Snapshots written before any
         spec (or under an older spec) scan unpruned — correct, just
         unaided, which is Iceberg's evolution contract."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
         eq, ranges = eq or {}, ranges or {}
-        parts = []
-        for s in self._visible_snaps(None):
-            df = spark.read.parquet(*s.files)
-            spec = [tuple(t) for t in s.meta.get("spec", [])]
-            if spec:
-                df = df.filter(self._partition_predicate(spec, eq, ranges))
-                df = df.drop(*[name for name, _ in self._derived(spec)])
-            parts.append(df)
+        parts = [self._read_one(spark, s, eq, ranges)
+                 for s in self._visible_snaps(None)]
         if not parts:
             return None
-        out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                     parts)
+        out = _union(parts)
         for c, v in eq.items():
             out = out.filter(F.col(c) == v)
         for c, (lo, hi) in ranges.items():
@@ -665,13 +653,13 @@ class Table:
     def read(self, spark: SparkSession, as_of: str | None = None,
              branch: str | None = None) -> DataFrame | None:
         """Union of all snapshot data up to ``as_of`` (time travel).
-        Derived partition columns stay hidden. Multi-snapshot reads use
-        ``mergeSchema`` so a column added in a later snapshot surfaces
-        with nulls for pre-evolution rows (Iceberg add-column
-        semantics) — without it Spark takes one file's schema and
-        silently DROPS the new column. ``branch`` reads the staged
-        lineage instead (main-up-to-fork + branch commits) — the AUDIT
-        read of write-audit-publish."""
+        Derived partition columns stay hidden. Specless snapshots are
+        read in ONE multi-path ``mergeSchema`` read, so a column added
+        in a later snapshot surfaces with nulls for pre-evolution rows
+        (Iceberg add-column semantics) — without it Spark takes one
+        file's schema and silently DROPS the new column. ``branch``
+        reads the staged lineage instead (main-up-to-fork + branch
+        commits) — the AUDIT read of write-audit-publish."""
         snaps = self._visible_snaps(branch)
         if as_of is not None:
             hits = [i for i, s in enumerate(snaps) if s.snapshot_id == as_of]
@@ -680,27 +668,11 @@ class Table:
                     f"snapshot {as_of!r} not in manifest of {self.name!r} "
                     "(never committed, rolled back, or expired)")
             snaps = snaps[: hits[0] + 1]
-        specless = [s for s in snaps if not s.meta.get("spec")]
-        specful = [s for s in snaps if s.meta.get("spec")]
-        if not specless and not specful:
-            return None
-        if not specful:
-            paths = [p for s in specless for p in s.files]
-            return spark.read.option("mergeSchema", "true").parquet(*paths)
-        from functools import reduce
-
-        parts = []
-        if specless:
-            parts.append(
-                spark.read.option("mergeSchema", "true").parquet(
-                    *[p for s in specless for p in s.files]))
-        for s in specful:
-            df = spark.read.parquet(*s.files)
-            drop = [name for name, _ in
-                    self._derived([tuple(t) for t in s.meta["spec"]])]
-            parts.append(df.drop(*drop))
-        return reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        specless = [p for s in snaps if not s.meta.get("spec") for p in s.files]
+        parts = ([spark.read.option("mergeSchema", "true").parquet(*specless)]
+                 if specless else [])
+        parts += [self._read_one(spark, s) for s in snaps if s.meta.get("spec")]
+        return _union(parts) if parts else None
 
     def read_snapshot(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
         """Read exactly one committed snapshot's files — the epoch loop
@@ -708,19 +680,21 @@ class Table:
         scan) instead of keeping the wide Python-stage output pinned in
         the block manager."""
         snap = next(s for s in self.snapshots() if s.snapshot_id == snapshot_id)
-        return spark.read.parquet(*snap.files)
+        return self._read_one(spark, snap)
 
     def expire_snapshots(self, *, keep_last: int | None = None,
                          older_than_epoch: int | None = None) -> list[str]:
         """Retention roll-off (Iceberg ``expire_snapshots`` analog; the
         reference keeps a ~3-month live table and rolls older crawls
-        into history, /root/reference/README.md:108-115): drop
+        into history, reference README.md:108-115): drop main-lineage
         snapshots past the retention bound from the manifest and delete
         their data dirs. A snapshot expires when it is BOTH beyond the
         ``keep_last`` newest (by commit order) AND, if given, has
         ``epoch < older_than_epoch`` — the conjunction mirrors
         Iceberg's retain-last + older-than pair, so neither knob alone
-        can empty a table.
+        can empty a table. Staged snapshots and the main lineage up to
+        every live fork never expire (Iceberg: ref-reachable snapshots
+        are retained).
 
         Resume-safety invariants (pinned in tests/test_catalog.py):
         the newest snapshot is never expired regardless of knobs, so
@@ -734,61 +708,31 @@ class Table:
         file count alongside ``compact`` — compaction collapses live
         snapshots, expiration retires dead ones. Returns expired ids.
         """
-        import shutil
 
-        with self._manifest_lock():
-            snaps = self.snapshots()
-            main = self._main_snaps(snaps)
-            # Branch protection (Iceberg: snapshots reachable from any
-            # ref never expire): staged branch snapshots are always
-            # kept, and so is the main lineage up to every live fork —
-            # a branch read unions main-up-to-fork, so expiring below a
-            # fork would break the staged lineage mid-audit.
-            protected: set[str] = set()
-            for ref in self.branches().values():
-                fork_id = ref["fork_id"]
-                if fork_id is None:
-                    continue
-                for s in main:
-                    protected.add(s.snapshot_id)
-                    if s.snapshot_id == fork_id:
-                        break
+        def rewrite(snaps, main, reach, _refs):
             keep_n = len(main) if keep_last is None else max(1, keep_last)
-            expired, kept = [], []
-            n_main = len(main)
-            main_pos = {s.snapshot_id: i for i, s in enumerate(main)}
-            for s in snaps:
-                if s.meta.get("branch") or s.snapshot_id in protected:
-                    kept.append(s)
-                    continue
-                from_newest = n_main - main_pos[s.snapshot_id]  # 1 = newest
-                old_enough = (older_than_epoch is None
-                              or s.epoch is None
-                              or s.epoch < older_than_epoch)
-                if from_newest > keep_n and old_enough:
-                    expired.append(s)
-                else:
-                    kept.append(s)
+            expired = {
+                s.snapshot_id for i, s in enumerate(main)
+                if s.snapshot_id not in reach and len(main) - i > keep_n
+                and (older_than_epoch is None or s.epoch is None
+                     or s.epoch < older_than_epoch)}
             if not expired:
-                return []
-            self._commit([
-                Snapshot(snapshot_id=s.snapshot_id, sequence=i,
-                         epoch=s.epoch, files=s.files, meta=s.meta)
-                for i, s in enumerate(kept)
-            ])
-        for s in expired:  # after the commit: readers never race a delete
-            for d in s.files:
-                shutil.rmtree(d, ignore_errors=True)
-        return [s.snapshot_id for s in expired]
+                return None
+            return [s for s in snaps if s.snapshot_id not in expired]
+
+        return [s.snapshot_id for s in self._swap(rewrite) or []]
 
     def remove_orphan_files(self, *, min_age_seconds: float = 3600.0) -> list[str]:
         """Delete data dirs under the table path that NO manifest
         snapshot references (Iceberg ``remove_orphan_files``). Orphans
-        are real in this design: ``append``/``compact``/``merge_upsert``
-        all write data BEFORE taking the commit lock, so a writer that
-        dies mid-flight leaves a fully-written dir with no manifest
-        entry, and a CAS-aborted compact/merge can leak one if its
-        cleanup is interrupted.
+        are real in this design: ``_write`` (and ``append_pdf``'s
+        pyarrow write) lays data down BEFORE ``_swap`` takes the commit
+        lock, so a writer that dies mid-flight leaves a fully-written
+        dir with no manifest entry. ``_swap`` deletes the dir of a
+        commit it aborts or refuses, and the dirs of the snapshots a
+        commit drops, but a crash can interrupt either cleanup. Dirs of
+        ref-reachable snapshots are never orphans: ``_swap`` never drops
+        those snapshots from the manifest.
 
         The in-flight-writer race is handled the same way Iceberg
         handles it: only dirs older than ``min_age_seconds`` (mtime)
@@ -796,9 +740,6 @@ class Table:
         never swept; the reference set is read under the manifest lock
         so a commit cannot land between listing and deletion. Returns
         the deleted dir paths."""
-        import shutil
-        import time
-
         data_root = os.path.join(self.path, "data")
         if not os.path.isdir(data_root):
             return []
@@ -820,9 +761,7 @@ class Table:
     def latest_epoch(self) -> int | None:
         """Highest committed epoch on the MAIN lineage — staged branch
         epochs must not perturb crawl resume numbering until published."""
-        epochs = [s.epoch for s in self._main_snaps(self.snapshots())
-                  if s.epoch is not None]
-        return max(epochs) if epochs else None
+        return _max_epoch(self._main_snaps(self.snapshots()))
 
     def is_empty(self) -> bool:
         """True when ``read()`` would return None (no main-lineage
@@ -831,7 +770,10 @@ class Table:
         return not self._main_snaps(self.snapshots())
 
     def truncate(self) -> None:
-        self._commit([])
+        """Drop every main-lineage snapshot and delete its data (staged
+        branches are carried through; a live fork refuses it like
+        ``replace``)."""
+        self._swap(lambda snaps, *_: self._staged(snaps))
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,

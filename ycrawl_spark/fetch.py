@@ -22,103 +22,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from . import codecs
 from .config import CrawlConfig, fail_roll
 from .hashing import xxh64_str
-
-FETCH_SCHEMA = (
-    "key string, image_id string, canonical_host string, epoch int, "
-    "attempt int, shuffle_rank long, status string, bytes binary, "
-    "caption_scraped string, exetime double"
-)
-
-PARSE_SCHEMA = (
-    "key string, image_id string, epoch int, w int, h int, fmt string, "
-    "phash long, psnr double, caption_scraped string"
-)
-
-
-def fetch_stage(selected: DataFrame, cfg: CrawlConfig, epoch: int) -> DataFrame:
-    """(key,url,image_id,attempt,shuffle_rank,...) → fetched envelope rows.
-
-    Repartitioned by host bucket so politeness locality holds and hot
-    hosts were already salted upstream by the scheduler.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for key, image_id, host, attempt, srank in zip(
-                b["key"], b["image_id"], b["canonical_host"], b["attempt"], b["shuffle_rank"]
-            ):
-                failed = fail_roll(key, int(attempt), cfg)
-                exe = (xxh64_str(f"exe:{key}:{attempt}") % 7000) / 100.0
-                if failed:
-                    out.append(
-                        (key, image_id, host, epoch, int(attempt), int(srank),
-                         "ERR", None, None, exe)
-                    )
-                else:
-                    row = codecs.make_image_row(image_id)
-                    out.append(
-                        (key, image_id, host, epoch, int(attempt), int(srank),
-                         "ok", row["bytes"], row["caption"], exe)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "key", "image_id", "canonical_host", "epoch", "attempt",
-                    "shuffle_rank", "status", "bytes", "caption_scraped", "exetime",
-                ],
-            )
-
-    # Explicit partition count: the pre-fetch rows are tiny (~200 B), so
-    # an unpinned repartition lets AQE coalesce them into one or two
-    # partitions and serialize the codec-heavy Python stage; the real
-    # cost per row is the fetch+decode work, not the input bytes.
-    n_parts = selected.sparkSession.sparkContext.defaultParallelism
-    return (
-        selected.repartition(n_parts, "canonical_host")
-        .mapInPandas(run, schema=FETCH_SCHEMA)
-    )
-
-
-def parse_stage(fetched_ok: DataFrame) -> DataFrame:
-    """Decode payloads: (bytes) → (w, h, fmt, phash, psnr) — vectorized.
-
-    ``psnr`` is measured against the ground-truth pixels (regenerated
-    from image_id — the pixels "the site served"). Lossless fmts give
-    +inf (stored as 999.0); lossy must be ≥ 40 dB downstream.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for key, image_id, epoch, raw, cap in zip(
-                b["key"], b["image_id"], b["epoch"], b["bytes"], b["caption_scraped"]
-            ):
-                rb = bytes(raw)
-                px = codecs.decode(rb)
-                h, w, _ = px.shape
-                fmt = "ppm" if rb[:2] == b"P6" else codecs.FORMATS[rb[4]]
-                truth = codecs.gen_pixels(image_id, w, h)
-                p = codecs.psnr(truth, px)
-                out.append(
-                    (key, image_id, int(epoch), w, h, fmt,
-                     codecs.phash64(px), min(p, 999.0), cap)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["key", "image_id", "epoch", "w", "h", "fmt",
-                         "phash", "psnr", "caption_scraped"],
-            )
-
-    return fetched_ok.select(
-        "key", "image_id", "epoch", "bytes", "caption_scraped"
-    ).mapInPandas(run, schema=PARSE_SCHEMA)
-
 
 FETCH_PARSE_SCHEMA = (
     "key string, image_id string, canonical_host string, epoch int, "
@@ -155,16 +63,12 @@ def fetch_parse_stage(selected: DataFrame, cfg: CrawlConfig, epoch: int,
     (key,url,…,*_ref) to parsed features with the per-row ``valid``
     verdict; ERR rows carry null parse columns and null ``valid``.
 
-    The split fetch_stage → parse_stage pair round-trips every payload
-    through a persist and a second Python stage; since the engine never
-    stores raw bytes (only fetch_log), fusing removes one full
-    encode/decode+transfer of the payload per URL — the single hottest
-    cost in the crawl loop. Validation happens here too: the expected
+    The engine never stores raw bytes (only fetch_log), so each payload
+    is encoded and decoded inside this one stage and never crosses the
+    Arrow boundary. Validation happens here too: the expected
     (w,h,fmt,caption,phash) ride along from the frontier (REF_COLS, one
     join at crawl start, amortized over every epoch) instead of a
-    sort-merge join against the full images dim every epoch. The
-    separate stages remain as the archival path (when a ``fetched``
-    bytes table is wanted).
+    sort-merge join against the full images dim every epoch.
 
     ``n_parts``: partition count for the Python stage — the caller
     right-sizes it from the known candidate count so tail retry epochs
@@ -258,31 +162,3 @@ def fetch_parse_stage(selected: DataFrame, cfg: CrawlConfig, epoch: int,
         .mapInPandas(run, schema=FETCH_PARSE_SCHEMA)
     )
 
-
-def validate_against_images(parsed: DataFrame, images: DataFrame) -> DataFrame:
-    """Per-row invariants vs the input image table (BASELINE.json
-    input_hint): decoded dims match, PSNR ≥ 40 dB for lossy / exact for
-    lossless, caption equality, phash equality. Equi-join on image_id
-    (both sides bucketable by image_id at scale), all predicates
-    JVM-side columns."""
-    dim = images.select(
-        F.col("image_id"),
-        F.col("w").alias("w_ref"),
-        F.col("h").alias("h_ref"),
-        F.col("fmt").alias("fmt_ref"),
-        F.col("caption").alias("caption_ref"),
-        F.col("phash").alias("phash_ref"),
-    )
-    j = parsed.join(dim, "image_id", "left")
-    return j.withColumn(
-        "valid",
-        (F.col("w") == F.col("w_ref"))
-        & (F.col("h") == F.col("h_ref"))
-        & (F.col("fmt") == F.col("fmt_ref"))
-        & (F.col("caption_scraped") == F.col("caption_ref"))
-        & (F.col("phash") == F.col("phash_ref"))
-        & (
-            F.when(F.col("fmt") == "lossy", F.col("psnr") >= 40.0)
-            .otherwise(F.col("psnr") >= 999.0)
-        ),
-    )

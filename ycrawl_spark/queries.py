@@ -304,13 +304,16 @@ def at_a_glance_topk(spark, sf_dir):
 )
 def regex_date_window_min(spark, sf_dir):
     """Case-insensitive regex + symmetric date window + group-min
-    (reference q_hotel_calendar, historyplot.py:73-101)."""
+    (reference q_hotel_calendar, historyplot.py:73-101). ``part``
+    scales with the corpus, so the join carries no broadcast hint:
+    the planner broadcasts it only while it fits
+    ``autoBroadcastJoinThreshold``."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     lo = F.date_sub(F.lit("1997-01-01").cast("date"), 7)
     hi = F.date_add(F.lit("2000-01-01").cast("date"), 7)
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .filter(F.col("p_name").rlike("(?i)(green|blue)"))
         .filter(F.col("l_shipdate").cast("date").between(lo, hi))
         .groupBy("p_brand")

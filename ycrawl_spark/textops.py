@@ -854,9 +854,12 @@ def bpe_word_tokens(df: DataFrame, merges: list[tuple[str, str]],
 def bpe_real_token_stats(df: DataFrame, merges: list[tuple[str, str]],
                          text_col: str = "text") -> DataFrame:
     """Per-doc token counts under a LEARNED BPE merge list: tokenize
-    each distinct word once (vocab-sized work), then broadcast-join the
-    per-word subword count back onto the exploded corpus — the raw text
-    is touched exactly once and never carries arrays through a shuffle."""
+    each distinct word once (vocab-sized work), then join the per-word
+    subword count back onto the exploded corpus — the raw text is
+    touched exactly once and never carries arrays through a shuffle.
+    No broadcast hint: the vocabulary grows with the corpus, so the
+    planner's size check picks broadcast while it fits
+    ``autoBroadcastJoinThreshold`` and a shuffle join beyond."""
     word_tok = bpe_word_tokens(df, merges, text_col).select(
         "word", F.size("syms").alias("n_sub")
     )
@@ -864,7 +867,7 @@ def bpe_real_token_stats(df: DataFrame, merges: list[tuple[str, str]],
         "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("word")
     ).filter(F.col("word") != "")
     return (
-        toks.join(F.broadcast(word_tok), "word")
+        toks.join(word_tok, "word")
         .groupBy("doc_id")
         .agg(
             F.sum("n_sub").cast("long").alias("n_bpe_tokens"),
