@@ -14,7 +14,7 @@ Modes:
   --crawl-only --cores N   run just the crawl bench at local[N], print
                            a small JSON line (used by --scaling).
   --scaling                run the crawl bench at two parallelism
-                           levels (8 and 32 cores by default) in
+                           levels (2 and 8 cores by default) in
                            separate subprocesses (fresh JVM each) and
                            print throughput at both + scaling
                            efficiency — the sandbox evidence for the
@@ -237,7 +237,7 @@ def bench_crawl(spark, n_urls: int, input_dir: str | None = None,
         os.symlink(os.path.join(input_dir, "images"),
                    os.path.join(workdir, "images"))
         t0 = time.time()
-        stats = run_crawl(spark, cfg, workdir, use_bloom=True)
+        stats = run_crawl(spark, cfg, workdir)
         elapsed = time.time() - t0
         log = Catalog(workdir).table("fetch_log").read(spark)
         n_fetched = log.count() if log is not None else 0
@@ -313,9 +313,9 @@ def main() -> None:
         print(json.dumps(res))
         return
 
-    from ycrawl_spark.session import get_spark
+    from ycrawl_spark.session import default_cores, get_spark
 
-    cores = args.cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or 32
+    cores = args.cores or default_cores()
     extra_conf = None
     if os.environ.get("BENCH_RAMDISK", "") not in ("", "0"):
         # RAM-backed write path (BASELINE.md 8M forensics): shuffle

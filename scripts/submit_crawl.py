@@ -30,7 +30,6 @@ def main() -> None:
     ap.add_argument("--budget", type=int, default=64)
     ap.add_argument("--max-retry", type=int, default=3)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--no-bloom", action="store_true")
     args = ap.parse_args()
 
     spark = (
@@ -52,8 +51,7 @@ def main() -> None:
         max_retry=args.max_retry,
     )
     t0 = time.time()
-    stats = run_crawl(spark, cfg, args.workdir, use_bloom=not args.no_bloom,
-                      resume=args.resume)
+    stats = run_crawl(spark, cfg, args.workdir, resume=args.resume)
     elapsed = time.time() - t0
     done, forfeit = seen_sets(spark, args.workdir, cfg)
     n_fetched = sum(s.n_selected for s in stats)

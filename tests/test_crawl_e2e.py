@@ -20,14 +20,13 @@ CFG = CrawlConfig(
     max_retry=2,
     fail_pct=15,
     max_epochs=40,
-    bloom_min_items=0,  # force the Bloom path at test scale
 )
 
 
 @pytest.fixture(scope="module")
 def crawl_run(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl"))
-    stats = run_crawl(spark, CFG, wd, use_bloom=True)
+    stats = run_crawl(spark, CFG, wd)
     return wd, stats
 
 
@@ -74,65 +73,15 @@ def test_resume_determinism(spark, tmp_path_factory, crawl_run, monkeypatch):
     wd_full, _ = crawl_run
     wd = str(tmp_path_factory.mktemp("crawl_resume"))
     # run only 2 epochs, then resume to completion in two re-entries,
-    # one per bloom_backend, neither of which may touch a Bloom filter
+    # neither of which may touch a Bloom filter
     partial_cfg = CrawlConfig(**{**CFG.__dict__, "max_epochs": 2})
-    run_crawl(spark, partial_cfg, wd, use_bloom=True)
+    run_crawl(spark, partial_cfg, wd)
     _forbid_bloom(monkeypatch)
-    for backend, max_epochs in (("driver", 4), ("sharded", CFG.max_epochs)):
-        cfg = CrawlConfig(**{**CFG.__dict__, "bloom_backend": backend,
-                             "max_epochs": max_epochs})
-        run_crawl(spark, cfg, wd, use_bloom=True, resume=True)
+    for max_epochs in (4, CFG.max_epochs):
+        cfg = CrawlConfig(**{**CFG.__dict__, "max_epochs": max_epochs})
+        run_crawl(spark, cfg, wd, resume=True)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
     assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_full, CFG)
-
-
-def test_exact_vs_bloom_path_identical(spark, tmp_path_factory):
-    small = CrawlConfig(**{**CFG.__dict__, "n_urls": 300, "max_epochs": 30})
-    wd1 = str(tmp_path_factory.mktemp("c_exact"))
-    wd2 = str(tmp_path_factory.mktemp("c_bloom"))
-    run_crawl(spark, small, wd1, use_bloom=False)
-    run_crawl(spark, small, wd2, use_bloom=True)
-    assert crawl_order(spark, wd1) == crawl_order(spark, wd2)
-
-
-def test_incremental_vs_regenerate_mode_identical(spark, tmp_path_factory, crawl_run):
-    """The incremental frontier (zero steady-state joins) and the
-    reference-mechanics regenerate mode (seen-join per tick, bloom-
-    gated) must produce byte-identical crawl order and seen sets."""
-    wd_inc, _ = crawl_run  # module fixture runs the default (incremental)
-    assert CFG.frontier_mode == "incremental"
-    regen = CrawlConfig(**{**CFG.__dict__, "frontier_mode": "regenerate"})
-    wd_re = str(tmp_path_factory.mktemp("c_regen"))
-    run_crawl(spark, regen, wd_re, use_bloom=True)
-    assert crawl_order(spark, wd_re) == crawl_order(spark, wd_inc)
-    assert seen_sets(spark, wd_re, regen) == seen_sets(spark, wd_inc, CFG)
-
-
-def test_resume_in_regenerate_mode(spark, tmp_path_factory, crawl_run):
-    """Kill/resume determinism holds in regenerate mode too (the bloom-
-    gated per-epoch state join path)."""
-    wd_full, _ = crawl_run
-    regen = CrawlConfig(**{**CFG.__dict__, "frontier_mode": "regenerate"})
-    wd = str(tmp_path_factory.mktemp("c_regen_resume"))
-    partial = CrawlConfig(**{**regen.__dict__, "max_epochs": 2})
-    run_crawl(spark, partial, wd, use_bloom=True)
-    run_crawl(spark, regen, wd, use_bloom=True, resume=True)
-    assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
-    assert seen_sets(spark, wd, regen) == seen_sets(spark, wd_full, CFG)
-
-
-def test_sharded_bloom_backend_identical(spark, tmp_path_factory, crawl_run):
-    """The partitioned-Bloom backend (cfg.bloom_backend='sharded' — the
-    10^10-key layout where the filter is never broadcast) must produce
-    byte-identical crawl order and seen sets, in both frontier modes."""
-    wd_ref, _ = crawl_run  # driver-bloom incremental run
-    for mode in ("incremental", "regenerate"):
-        cfg = CrawlConfig(**{**CFG.__dict__, "frontier_mode": mode,
-                             "bloom_backend": "sharded", "bloom_shards": 8})
-        wd = str(tmp_path_factory.mktemp(f"c_sharded_{mode}"))
-        run_crawl(spark, cfg, wd, use_bloom=True)
-        assert crawl_order(spark, wd) == crawl_order(spark, wd_ref)
-        assert seen_sets(spark, wd, cfg) == seen_sets(spark, wd_ref, CFG)
 
 
 def test_distributed_counter_sink_identical(spark, tmp_path_factory, crawl_run):
@@ -145,7 +94,7 @@ def test_distributed_counter_sink_identical(spark, tmp_path_factory, crawl_run):
     wd_ref, _ = crawl_run  # collect path (n_hosts=12 < default max)
     cfg = CrawlConfig(**{**CFG.__dict__, "counter_collect_max": 0})
     wd = str(tmp_path_factory.mktemp("c_dist_counters"))
-    run_crawl(spark, cfg, wd, use_bloom=True)
+    run_crawl(spark, cfg, wd)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_ref)
 
     def counter_rows(w):
@@ -158,31 +107,6 @@ def test_distributed_counter_sink_identical(spark, tmp_path_factory, crawl_run):
     assert counter_rows(wd) == counter_rows(wd_ref)
 
 
-def test_sharded_resume_uses_durable_shards(spark, tmp_path_factory, crawl_run):
-    """Regenerate+sharded resume: the durable bloom_shards snapshot
-    (written at exit, labelled with fetch_log's epoch) is loaded on
-    re-entry instead of an O(seen) rebuild, and the resumed crawl still
-    matches the uninterrupted reference run exactly."""
-    from ycrawl_spark.catalog import Catalog
-
-    wd_full, _ = crawl_run
-    cfg = CrawlConfig(**{**CFG.__dict__, "frontier_mode": "regenerate",
-                         "bloom_backend": "sharded", "bloom_shards": 8,
-                         "state_compact_every": 2})
-    wd = str(tmp_path_factory.mktemp("c_sharded_resume"))
-    partial = CrawlConfig(**{**cfg.__dict__, "max_epochs": 2})
-    run_crawl(spark, partial, wd, use_bloom=True)
-    cat = Catalog(wd)
-    # the mid-crawl compaction persisted a shard snapshot labelled
-    # with the epoch it covered
-    assert cat.table("bloom_shards").latest_epoch() == 2
-    run_crawl(spark, cfg, wd, use_bloom=True, resume=True)
-    assert cat.table("bloom_shards").latest_epoch() == \
-        cat.table("fetch_log").latest_epoch()
-    assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
-    assert seen_sets(spark, wd, cfg) == seen_sets(spark, wd_full, CFG)
-
-
 def test_log_compaction_mode_identical(spark, tmp_path_factory, crawl_run):
     """Crawling with per-3-epoch fetch_log compaction yields the exact
     same crawl order + seen sets, keeps resume idempotent (selects 0 on
@@ -192,13 +116,13 @@ def test_log_compaction_mode_identical(spark, tmp_path_factory, crawl_run):
     wd_full, _ = crawl_run
     wd = str(tmp_path_factory.mktemp("crawl_compact"))
     cfg = CrawlConfig(**{**CFG.__dict__, "log_compact_every": 3})
-    stats = run_crawl(spark, cfg, wd, use_bloom=True)
+    stats = run_crawl(spark, cfg, wd)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
     assert seen_sets(spark, wd, cfg) == seen_sets(spark, wd_full, CFG)
     n_epochs = len([s for s in stats if s.n_selected > 0])
     n_snaps = len(Catalog(wd).table("fetch_log").snapshots())
     assert n_snaps < n_epochs  # compaction really ran
-    again = run_crawl(spark, cfg, wd, use_bloom=True, resume=True)
+    again = run_crawl(spark, cfg, wd, resume=True)
     assert sum(s.n_selected for s in again) == 0
 
 
@@ -207,7 +131,7 @@ def test_frontier_ingestion_crawls_only_delta(spark, tmp_path_factory,
     """Mid-crawl URL discovery: ingest_frontier + resume schedules
     exactly the novel URLs — no refetch of attempted keys, no frontier
     rewrite; the entry seen-state join does the filtering, exactly and
-    without a Bloom filter under either bloom_backend."""
+    without a Bloom filter, on each of two successive re-entries."""
     import pandas as pd
 
     from ycrawl_spark import codecs, synth
@@ -216,13 +140,13 @@ def test_frontier_ingestion_crawls_only_delta(spark, tmp_path_factory,
 
     cfg = CrawlConfig(**{**CFG.__dict__, "n_urls": 300, "max_epochs": 30})
     wd = str(tmp_path_factory.mktemp("crawl_ingest"))
-    run_crawl(spark, cfg, wd, use_bloom=True)
+    run_crawl(spark, cfg, wd)
     log_before = Catalog(wd).table("fetch_log").read(spark).count()
     done0, forf0 = seen_sets(spark, wd, cfg)
 
     _forbid_bloom(monkeypatch)
     new_keys: set = set()
-    for backend, lo, hi in (("driver", 300, 340), ("sharded", 340, 380)):
+    for lo, hi in ((300, 340), (340, 380)):
         new_urls = spark.createDataFrame(
             synth.frontier_pdf(cfg, lo, hi), schema=synth.FRONTIER_SCHEMA)
         new_images = spark.createDataFrame(
@@ -230,8 +154,7 @@ def test_frontier_ingestion_crawls_only_delta(spark, tmp_path_factory,
                           for i in range(lo, hi)]),
             schema=synth.IMAGES_SCHEMA)
         assert ingest_frontier(spark, wd, new_urls, new_images) == hi - lo
-        run_crawl(spark, CrawlConfig(**{**cfg.__dict__, "bloom_backend": backend}),
-                  wd, use_bloom=True, resume=True)
+        run_crawl(spark, cfg, wd, resume=True)
 
         done1, forf1 = seen_sets(spark, wd, cfg)
         new_keys |= {r["key"]

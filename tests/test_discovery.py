@@ -3,8 +3,8 @@ fetch deterministically yields child URLs that enter the frontier at
 epoch end with depth = 1 + min(parent depth) — the north_rule's
 "priority, depth, discovery-time" ordering over a frontier that GROWS
 mid-crawl. Crawl order + seen set must still match the pure-Python
-simulator exactly, in both frontier modes, across resume, and after a
-frontier-append loss healed from the fetch_log."""
+simulator exactly, across resume, and after a frontier-append loss
+healed from the fetch_log."""
 
 from __future__ import annotations
 
@@ -31,7 +31,6 @@ CFG = CrawlConfig(
     max_retry=2,
     fail_pct=12,
     max_epochs=40,
-    bloom_min_items=0,
 )
 
 
@@ -42,7 +41,7 @@ def _cfg(**kw) -> CrawlConfig:
 @pytest.fixture(scope="module")
 def disc_run(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("disc"))
-    stats = run_crawl(spark, CFG, wd, use_bloom=True)
+    stats = run_crawl(spark, CFG, wd)
     return wd, stats
 
 
@@ -84,19 +83,11 @@ def test_discovered_frontier_rows_carry_dynamics(spark, disc_run):
     ).count() == 0
 
 
-def test_discovery_modes_identical(spark, tmp_path_factory, disc_run):
-    wd_inc, _ = disc_run
-    wd_reg = str(tmp_path_factory.mktemp("disc_reg"))
-    run_crawl(spark, _cfg(frontier_mode="regenerate"), wd_reg, use_bloom=True)
-    assert crawl_order(spark, wd_reg) == crawl_order(spark, wd_inc)
-    assert seen_sets(spark, wd_reg, CFG) == seen_sets(spark, wd_inc, CFG)
-
-
 def test_discovery_resume_determinism(spark, tmp_path_factory, disc_run):
     wd_full, _ = disc_run
     wd = str(tmp_path_factory.mktemp("disc_resume"))
-    run_crawl(spark, _cfg(max_epochs=3), wd, use_bloom=True)
-    run_crawl(spark, CFG, wd, use_bloom=True, resume=True)
+    run_crawl(spark, _cfg(max_epochs=3), wd)
+    run_crawl(spark, CFG, wd, resume=True)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
     assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_full, CFG)
 
@@ -108,7 +99,7 @@ def test_heal_recovers_lost_frontier_appends(spark, tmp_path_factory, disc_run):
     live path appended (same keys, depths, epoch_added cohorts)."""
     wd_full, _ = disc_run
     wd = str(tmp_path_factory.mktemp("disc_heal"))
-    run_crawl(spark, _cfg(max_epochs=3), wd, use_bloom=True)
+    run_crawl(spark, _cfg(max_epochs=3), wd)
     frontier_t = Catalog(wd).table("frontier")
     before = frontier_t.read(spark).filter(F.col("epoch_added") > 0)
     lost = [(r["key"], r["depth"], r["epoch_added"])
@@ -125,7 +116,7 @@ def test_heal_recovers_lost_frontier_appends(spark, tmp_path_factory, disc_run):
            for r in after.select("key", "depth", "epoch_added").collect()}
     assert got == set(lost)
     # and the healed workdir resumes to the exact full-run crawl
-    run_crawl(spark, CFG, wd, use_bloom=True, resume=True)
+    run_crawl(spark, CFG, wd, resume=True)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
 
 
@@ -137,7 +128,7 @@ def test_discovery_flush_cadence_invariant(spark, tmp_path_factory, disc_run):
     so nothing is re-discovered, lost, or double-appended."""
     wd_base, _ = disc_run
     wd = str(tmp_path_factory.mktemp("disc_flush1"))
-    run_crawl(spark, _cfg(discovery_flush_every=1), wd, use_bloom=True)
+    run_crawl(spark, _cfg(discovery_flush_every=1), wd)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_base)
     assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_base, CFG)
     cols = ["key", "depth", "epoch_added"]
@@ -170,7 +161,7 @@ def test_discovery_off_keeps_seed_only_behavior(spark, tmp_path_factory):
     cfg = _cfg(discovery_fanout=0, n_seed_urls=None, n_urls=200,
                max_epochs=20)
     wd = str(tmp_path_factory.mktemp("disc_off"))
-    run_crawl(spark, cfg, wd, use_bloom=True)
+    run_crawl(spark, cfg, wd)
     sim = simulate(cfg)
     assert crawl_order(spark, wd) == sim.order
     frontier = Catalog(wd).table("frontier").read(spark)

@@ -5,8 +5,9 @@ surveyed in SURVEY.md) as an idiomatic Spark DataFrame/SQL engine:
 
 - URL frontier as a bucketed DataFrame/table (reference:
   Coordinator/main.py:34-61 regenerates an in-memory list per call).
-- URL-seen membership as a partitioned Bloom filter built by DataFrame
-  aggregation, broadcast per epoch, with exact anti-join recheck
+- URL-seen membership as one exact join of the frontier against the
+  fetch_log-derived crawl state per crawl (re)entry; Bloom and cuckoo
+  filter primitives are tested against the exact anti-join
   (reference: GCS prefix listing, Coordinator/main.py:8-25,68).
 - Politeness / priority scheduling as window functions
   (reference: serial paced dispatch, Worker/main.py:51-68).

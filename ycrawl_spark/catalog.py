@@ -346,8 +346,8 @@ class Table:
                 meta: dict | None = None) -> str:
         """Write df as the ONLY main-lineage snapshot (Iceberg
         ``createOrReplace`` semantics) and garbage-collect the data of
-        the superseded snapshots after the commit. Used for compacted
-        state tables (e.g. ``seen_agg``) rewritten every epoch. Staged
+        the superseded snapshots after the commit. Used for tables
+        rewritten whole (e.g. by ``materialize_merges``). Staged
         branch snapshots are carried through; a live branch's fork
         lineage cannot be superseded, so replace raises ValueError
         while one is staged on a non-empty fork."""

@@ -5,6 +5,10 @@ Worker config, /root/reference/Worker/main.py:10-16) — `max-retry`,
 `delay-target`, `stage-size`, batch counts. Here it is a static
 dataclass shipped with the job (spark-submit --py-files), never fetched
 at runtime.
+
+The engine has one frontier mode (pipeline.py): the live pending set is
+carried exactly across epochs, and the URL-seen test is one exact
+state join per (re)entry, so no knob here picks a mode or a filter.
 """
 
 from __future__ import annotations
@@ -34,55 +38,16 @@ class CrawlConfig:
 
     max_epochs: int = 64
 
-    # Frontier maintenance between epochs (identical results, different
-    # physical plans — equivalence is asserted in tests):
-    #   "incremental": the live pending set is carried exactly across
-    #     epochs (unselected ∪ retryable errors) — ZERO joins in the
-    #     steady-state loop; the seen-set membership test runs once per
-    #     (re)entry, where membership is actually unknown (resume and
-    #     ingested frontier rows), as the exact state join: a filter
-    #     probed once would cost more than the shuffle it saves.
-    #   "regenerate": reference mechanics (Coordinator/main.py:65-68
-    #     rebuilds the todo list from the seen scan every tick) — the
-    #     full pending set re-joins the compacted seen state every
-    #     epoch, Bloom-prefiltered once the state reaches
-    #     bloom_min_items.
-    frontier_mode: str = "incremental"
-
-    # Seen-set Bloom gating, regenerate mode only (the one mode that
-    # keeps a filter current per epoch and probes it every epoch;
-    # incremental re-entry always takes the exact join). The prefilter
-    # pays for itself only once the attempted-key set is large enough
-    # that shuffling it into the state join dominates the build+probe
-    # cost. Below the threshold the exact join runs alone (same results
-    # either way — tests force the Bloom path with bloom_min_items=0).
-    # Below ~1M attempted keys the state side still broadcast-joins
-    # (tens of MB), so the exact join wins outright; beyond it the
-    # Bloom gates the shuffled join down to maybe-hits only.
+    # No effect: the seen-set test is the exact entry join, which
+    # builds no Bloom. Kept only because perfbench/workloads.py still
+    # passes it.
     bloom_min_items: int = 1_000_000
 
-    # Bloom backend of regenerate mode's per-epoch gate (incremental
-    # mode builds no filter): "driver" holds one bitset on the driver
-    # and broadcasts it per epoch — right for any filter that fits a
-    # broadcast. "sharded" keys the filter by xxhash64(key) % n_shards
-    # and tests membership via a cogrouped applyInPandas, so a task
-    # only ever holds its shard's bits (total/n_shards) — the 10^10-key
-    # layout where the full filter (~12 GB at 1% fpp) can never be
-    # broadcast. Identical results (tests assert).
-    bloom_backend: str = "driver"
-    bloom_shards: int = 64
-
-    # Largest seen-state (rows) the epoch join will broadcast. Below it
+    # Largest seen-state (rows) the entry join will broadcast. Below it
     # the state ships to executors once (no shuffle of either side);
     # above it the join shuffles both sides — still cheap and, unlike a
     # broadcast (a serial driver collect), it scales with executors.
     state_broadcast_max: int = 100_000
-
-    # Durable seen-state compaction cadence: the in-memory state is
-    # localCheckpoint'ed every epoch; the parquet snapshot (resume
-    # fast-path) is rewritten every K epochs. Resume after a crash
-    # between snapshots rebuilds state from the append-only fetch_log.
-    state_compact_every: int = 4
 
     # fetch_log small-file compaction cadence (0 = off): every K epochs
     # the log's per-epoch snapshots are rewritten into one (see

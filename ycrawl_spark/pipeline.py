@@ -16,11 +16,15 @@ state, continue with the next epoch. That is the checkpoint/lineage
 story the north_rule asks for; the ``checkpoint`` table additionally
 records per-epoch, per-partition counters for observability.
 
-Two frontier modes (cfg.frontier_mode, identical results — asserted in
-tests), see config.py. The default ("incremental") keeps the
-steady-state epoch at FOUR jobs, none of them O(frontier) after epoch 1
-(driver-side fixed cost is what kills N→4N scaling efficiency, measured
-via the phase profile):
+One frontier mode. The URL-seen membership test runs once per
+(re)entry, where membership is actually unknown (resume, ingested
+frontier rows): the exact left join of the frontier against the
+fetch_log-derived state (``apply_seen_state``). From there the live
+pending set is carried exactly across epochs (budget losers ∪
+retryable errors ∪ discovered children), so the steady-state loop runs
+no seen-set join and builds no filter, and each epoch is FOUR jobs,
+none of them O(frontier) after epoch 1 (driver-side fixed cost is what
+kills N→4N scaling efficiency, measured via the phase profile):
   1. rank localCheckpoint: politeness windows materialized once; both
      the selected set and next epoch's survivors are cheap filters of
      it (+ a near-free count on the materialized blocks that
@@ -96,7 +100,7 @@ class EpochStats:
 
 def _agg_from_log(log: DataFrame) -> DataFrame:
     """(key, done, err_count) derived from the append-only fetch_log —
-    the ground-truth derivation, used to (re)build ``seen_agg``."""
+    the ground-truth derivation of the crawl state."""
     return log.groupBy("key").agg(
         F.max(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("done"),
         F.sum(F.when(F.col("status") == "ERR", 1).otherwise(0)).alias("err_count"),
@@ -104,53 +108,30 @@ def _agg_from_log(log: DataFrame) -> DataFrame:
 
 
 def load_seen_agg(spark: SparkSession, cat: Catalog) -> DataFrame | None:
-    """Latest compacted seen-state, reconciled against fetch_log.
-
-    fetch_log remains the source of truth: a ``seen_agg`` snapshot
-    labelled with the log's latest epoch is read back; a missing or
-    stale one is derived from the log and NOT written back. Incremental
-    mode never persists the snapshot (every re-entry would find it
-    stale again), and the caller localCheckpoints the result anyway;
-    regenerate mode persists its own state on its cadence and at exit.
-    Resume stays deterministic either way.
-    """
-    log_t, agg_t = cat.table("fetch_log"), cat.table("seen_agg")
-    last_log = log_t.latest_epoch()
-    if last_log is None:
+    """Crawl state derived from fetch_log, the single source of truth;
+    None before the first commit. Nothing persists it: the caller
+    localCheckpoints it once per (re)entry, so resume stays
+    deterministic."""
+    log_t = cat.table("fetch_log")
+    if log_t.latest_epoch() is None:
         return None
-    if agg_t.latest_epoch() != last_log:
-        return _agg_from_log(log_t.read(spark))
-    return agg_t.read(spark)
+    return _agg_from_log(log_t.read(spark))
 
 
 def apply_seen_state(pending: DataFrame, seen_agg: DataFrame | None,
-                     cfg: CrawlConfig, n_seen_hint: int,
-                     bloom: seen_mod.Bloom | None = None,
-                     shards: DataFrame | None = None) -> DataFrame:
+                     cfg: CrawlConfig, n_seen_hint: int) -> DataFrame:
     """THE URL-seen membership test: attach crawl state to frontier rows
-    and drop done/forfeited ones, by an exact left join against the
-    state (broadcast-hinted up to cfg.state_broadcast_max). Incremental
-    mode runs it once per (re)entry with no filter: a Bloom probed once
-    costs an O(seen) build plus a Python-UDF pass over every frontier
-    row, to save only the shuffle of the definitely-new rows.
-    Regenerate mode runs it every epoch with the filter it keeps current
-    (``bloom`` on the driver, or the partitioned ``shards``), which gates
-    the join once the state reaches cfg.bloom_min_items: definitely-
-    unseen rows bypass it, maybe-hits take the exact check."""
+    and drop done/forfeited ones, by one exact left join against the
+    state (broadcast-hinted up to cfg.state_broadcast_max). It runs once
+    per (re)entry, so a Bloom gate would cost an O(seen) build plus a
+    Python-UDF pass over every frontier row to save only the shuffle of
+    the definitely-new rows."""
     if seen_agg is None:
         return pending.withColumn("err_count", F.lit(0).cast("long"))
-    gated = n_seen_hint >= max(cfg.bloom_min_items, 1)
-    broadcast_state = n_seen_hint <= cfg.state_broadcast_max
-    if gated and shards is not None:
-        out = seen_mod.join_seen_state_sharded(
-            pending, seen_agg, shards, cfg.bloom_shards,
-            broadcast_state=broadcast_state,
-        )
-    else:
-        out = seen_mod.join_seen_state(
-            pending, seen_agg, "key", bloom if gated else None,
-            broadcast_state=broadcast_state,
-        )
+    out = seen_mod.join_seen_state(
+        pending, seen_agg, "key",
+        broadcast_state=n_seen_hint <= cfg.state_broadcast_max,
+    )
     return out.filter(
         (F.col("done") == 0) & (F.col("err_count") < cfg.max_retry)
     ).drop("done")
@@ -158,7 +139,7 @@ def apply_seen_state(pending: DataFrame, seen_agg: DataFrame | None,
 
 def _fetch_commit(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
                   selected: DataFrame, epoch: int, n_cand: int):
-    """Shared epoch tail: fused fetch → single wide append (totals via
+    """Epoch tail: fused fetch → single wide append (totals via
     Observation) → delta read-back → per-host lineage counters.
     Returns (stats, delta_df | None)."""
     ordered = scheduler.crawl_shuffle_order(selected, cfg, epoch)
@@ -410,9 +391,9 @@ def run_epoch_incremental(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
                           images_ref: DataFrame | None = None,
                           buffer: DiscoveryBuffer | None = None,
                           ) -> tuple[EpochStats, DataFrame]:
-    """One epoch, incremental frontier (see module docstring). ``pending``
-    carries exact state: every row is live (not done, not forfeited)
-    with its true ``err_count``."""
+    """One epoch (see module docstring). ``pending`` carries exact
+    state: every row is live (not done, not forfeited) with its true
+    ``err_count``."""
     with_attempt = pending.withColumn(
         "attempt", (F.col("err_count") + 1).cast("int")
     )
@@ -459,90 +440,13 @@ def run_epoch_incremental(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
     return stats, new_pending
 
 
-def run_epoch_regenerate(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
-                         pending: DataFrame, politeness: DataFrame,
-                         epoch: int, use_bloom: bool,
-                         seen_agg: DataFrame | None, n_seen_hint: int,
-                         hot_hosts: list[str] | None,
-                         bloom: seen_mod.Bloom | None,
-                         shards: DataFrame | None = None,
-                         images_ref: DataFrame | None = None,
-                         buffer: DiscoveryBuffer | None = None,
-                         ) -> tuple[EpochStats, DataFrame | None, DataFrame,
-                                    DataFrame | None]:
-    """One epoch, reference mechanics: the (monotonically shrinking)
-    pending set re-takes the seen-membership test every tick
-    (/root/reference/Coordinator/main.py:65-68), Bloom-gated at scale.
-    Exclusion is monotone, so filtering the previous pending against
-    the fresh state equals the full-frontier anti-join result."""
-    cand_obs = Observation(f"cand_{epoch}")
-    candidates = apply_seen_state(
-        pending.drop("err_count"), seen_agg, cfg, n_seen_hint, bloom, shards,
-    ).observe(cand_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    n_cand = int(cand_obs.get["n"] or 0)
-    new_pending = candidates
-    if n_cand == 0:
-        return EpochStats(epoch, 0, 0, 0, 0), seen_agg, new_pending, shards
-
-    with_attempt = candidates.withColumn(
-        "attempt", (F.col("err_count") + 1).cast("int")
-    ).drop("err_count")
-    selected = scheduler.select_per_host_budget(
-        with_attempt, politeness, cfg, hot_hosts
-    )
-    stats, delta = _fetch_commit(spark, cat, cfg, selected, epoch, n_cand)
-    if delta is None:
-        return stats, seen_agg, new_pending, shards
-
-    if cfg.discovery_fanout and images_ref is not None and buffer is not None:
-        novel, n_novel = _discover(spark, cat, cfg, delta, images_ref, epoch,
-                                   stats.n_ok, buffer)
-        if novel is not None:
-            # Novel children join the pending set directly — they are
-            # unattempted by construction, so next epoch's seen-state
-            # re-test passes them through unchanged. Union stays lazy:
-            # novel is checkpointed inside _discover and candidates is
-            # already checkpointed, so the lineage is shallow either way.
-            new_pending = new_pending.unionByName(novel)
-            stats.n_discovered = n_novel
-
-    # Incremental seen-state compaction: old agg ∪ epoch delta.
-    delta_agg = delta.groupBy("key").agg(
-        F.max(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("done"),
-        F.sum(F.when(F.col("status") == "ERR", 1).otherwise(0)).alias("err_count"),
-    )
-    merged = (
-        delta_agg if seen_agg is None else seen_agg.unionByName(delta_agg)
-        .groupBy("key")
-        .agg(F.max("done").alias("done"), F.sum("err_count").alias("err_count"))
-    )
-    new_agg = merged.localCheckpoint()
-
-    # Keep the filter current with O(delta) work, never an O(seen)
-    # rebuild: driver Bloom ORs the delta's keys in; the sharded filter
-    # rewrites only the shards the delta touches.
-    if use_bloom and cfg.bloom_backend == "sharded":
-        if shards is None:  # first delta of a fresh sharded crawl
-            shards = seen_mod.build_sharded_bloom(
-                delta.select("key"), max(2 * cfg.n_urls, 1024),
-                cfg.bloom_shards,
-            ).localCheckpoint()
-        else:
-            shards = seen_mod.update_sharded_bloom(
-                shards, delta.select("key"), cfg.bloom_shards
-            ).localCheckpoint()
-    elif bloom is not None:
-        seen_mod.add_keys_to_bloom(bloom, delta.select("key"), "key")
-
-    return stats, new_agg, new_pending, shards
-
-
 def run_crawl(spark: SparkSession, cfg: CrawlConfig, workdir: str,
               use_bloom: bool = True, resume: bool = False) -> list[EpochStats]:
     """Full crawl to quiescence (or cfg.max_epochs). Resumable: with
     ``resume=True`` continues after the last committed epoch.
-    ``use_bloom`` turns on regenerate mode's per-epoch Bloom gate;
-    incremental mode's one membership test per entry is always exact.
+    ``use_bloom`` has no effect (the one membership test per entry is
+    always the exact join); it stays only because perfbench/workloads.py
+    still passes it.
 
     AQE is switched off for the duration of the loop: every join and
     shuffle here is explicitly sized (broadcast hints, pinned fetch
@@ -555,14 +459,14 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     shuffle_before = spark.conf.get("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return _run_crawl_inner(spark, cfg, workdir, use_bloom, resume)
+        return _run_crawl_inner(spark, cfg, workdir, resume)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
 
 
 def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
-                     use_bloom: bool, resume: bool) -> list[EpochStats]:
+                     resume: bool) -> list[EpochStats]:
     cat = Catalog(workdir)
     frontier_t = cat.table("frontier")
     if frontier_t.is_empty():
@@ -613,40 +517,16 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     # Existing state is honoured whether or not resume renumbers epochs:
     # a second run on a finished workdir selects 0 (idempotent).
     seen_agg = load_seen_agg(spark, cat)
-    n_seen_hint = 0
+    n_seen = 0
     if seen_agg is not None:
         seen_agg = seen_agg.localCheckpoint()
-        n_seen_hint = seen_agg.count()
+        n_seen = seen_agg.count()
 
-    incremental = cfg.frontier_mode != "regenerate"
-    bloom = shards = None
-    if incremental:
-        # The URL-seen membership test at the frontier boundary: it runs
-        # here exactly once per (re)entry, as the exact state join —
-        # fresh crawls skip it (state empty), and nothing later probes a
-        # filter, so none is built (see apply_seen_state).
-        pending = apply_seen_state(pending, seen_agg, cfg, n_seen_hint)
-    elif use_bloom:
-        # Regenerate mode probes a filter every epoch and feeds it
-        # O(delta) per epoch (pre-sized for ~2 attempts/URL), so it is
-        # built eagerly: gating can engage mid-crawl as the seen set grows.
-        if cfg.bloom_backend != "sharded":
-            bloom = seen_mod.Bloom.sized_for(max(2 * cfg.n_urls, 1024))
-            if n_seen_hint > 0:
-                seen_mod.add_keys_to_bloom(bloom, seen_agg.select("key"), "key")
-        elif n_seen_hint > 0:
-            # Resume fast-path: the durable shard table (written at
-            # crawl exit, labelled with fetch_log's latest epoch — the
-            # "bloom shard paths" of the checkpoint manifest) skips
-            # the O(seen) rebuild; stale/missing → rebuild from state.
-            shards_t = cat.table("bloom_shards")
-            if shards_t.latest_epoch() == cat.table("fetch_log").latest_epoch():
-                shards = shards_t.read(spark).localCheckpoint()
-            else:
-                shards = seen_mod.build_sharded_bloom(
-                    seen_agg.select("key"), max(2 * cfg.n_urls, 1024),
-                    cfg.bloom_shards,
-                ).localCheckpoint()
+    # The URL-seen membership test at the frontier boundary: it runs
+    # here exactly once per (re)entry, as the exact state join — fresh
+    # crawls skip it (state empty), and nothing later probes a filter,
+    # so none is built (see apply_seen_state).
+    pending = apply_seen_state(pending, seen_agg, cfg, n_seen)
 
     hot_hosts = scheduler.hot_hosts_of(frontier, cfg)
     # Pending-size estimate drives per-epoch shuffle sizing: tail retry
@@ -666,38 +546,18 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
             "spark.sql.shuffle.partitions",
             str(max(2, min(n_pending_est // 20_000 + 1, max_shuffle))),
         )
-        if incremental:
-            st, pending = run_epoch_incremental(
-                spark, cat, cfg, pending, politeness, epoch, hot_hosts,
-                images_ref, disc_buffer,
-            )
-        else:
-            st, seen_agg, pending, shards = run_epoch_regenerate(
-                spark, cat, cfg, pending, politeness, epoch, use_bloom,
-                seen_agg, n_seen_hint, hot_hosts, bloom, shards, images_ref,
-                disc_buffer,
-            )
+        st, pending = run_epoch_incremental(
+            spark, cat, cfg, pending, politeness, epoch, hot_hosts,
+            images_ref, disc_buffer,
+        )
         stats.append(st)
         if st.n_selected == 0:
             break
         disc_buffer.flush(cat, epoch)
-        n_seen_hint += st.n_selected
-        # next pending ≤ losers + retryable errors + discovered children
-        # (exact in incremental mode, an upper bound in regenerate mode)
+        # next pending = losers + retryable errors + discovered children
         n_pending_est = max(
             st.n_candidates - st.n_selected + st.n_err, 1
         ) + st.n_discovered
-        # Durable state snapshot every K epochs (resume fast-path). In
-        # incremental mode the loop never reads seen_agg, so no snapshot
-        # jobs run here — fetch_log is the single source of truth and
-        # load_seen_agg derives the compact state from it exactly once at
-        # the next (re)entry.
-        if not incremental and seen_agg is not None and (
-            epoch % cfg.state_compact_every == 0
-        ):
-            cat.table("seen_agg").replace(seen_agg, epoch=epoch)
-            if shards is not None:
-                cat.table("bloom_shards").replace(shards, epoch=epoch)
         # fetch_log small-file compaction (opt-in): epoch-per-snapshot
         # appends are rewritten into one snapshot every K epochs —
         # bounded manifest/file-count at 10^3+-epoch crawls, content
@@ -714,21 +574,6 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     # this point the frontier table is complete (readers outside the
     # loop, resume without heal, final-state tests all rely on it).
     disc_buffer.flush(cat, last_epoch, force=True)
-    # Final durable state snapshot so a warm resume needs no log rebuild
-    # (labelled with the log's latest epoch — the staleness check in
-    # load_seen_agg compares against fetch_log).
-    last_log = cat.table("fetch_log").latest_epoch()
-    if not incremental and seen_agg is not None and last_log is not None and (
-        cat.table("seen_agg").latest_epoch() != last_log
-    ):
-        cat.table("seen_agg").replace(seen_agg, epoch=last_log)
-    # Durable shard snapshot (the checkpoint's bloom-shard paths): only
-    # regenerate mode holds shards, and its loop ORs in every delta, so
-    # the snapshot holds every key the log has at last_log.
-    if shards is not None and last_log is not None and (
-        cat.table("bloom_shards").latest_epoch() != last_log
-    ):
-        cat.table("bloom_shards").replace(shards, epoch=last_log)
     frontier.unpersist()
     politeness.unpersist()
     return stats
@@ -745,13 +590,12 @@ def ingest_frontier(spark: SparkSession, workdir: str, urls: DataFrame,
     Appends a frontier snapshot stamped with ``epoch_added`` (defaults
     to the log's latest epoch so provenance survives); the next
     ``run_crawl(..., resume=True)`` re-enters, and the entry-point
-    seen-state join — the ONE place membership is unknown in incremental
-    mode — filters already-attempted keys, so exactly the novel URLs are
-    scheduled. That join is exact and unfiltered: it runs once, so a
-    Bloom would cost more to build and probe than the shuffle it saves
-    (the Bloom gate lives in regenerate mode, probed every epoch). No
-    rewrite of the existing frontier, no state rebuild beyond the entry
-    join the resume pays anyway.
+    seen-state join — the ONE place membership is unknown — filters
+    already-attempted keys, so exactly the novel URLs are scheduled.
+    That join is exact and unfiltered: it runs once, so a Bloom would
+    cost more to build and probe than the shuffle it saves. No rewrite
+    of the existing frontier, no state rebuild beyond the entry join the
+    resume pays anyway.
 
     Returns the number of ingested rows.
     """

@@ -1736,7 +1736,7 @@ def crawl_e2e_parsed(spark, sf_dir):
 
     wd = tempfile.mkdtemp(prefix="ycrawl_q_")
     cfg = _tiny_cfg()
-    pipeline.run_crawl(spark, cfg, wd, use_bloom=True)
+    pipeline.run_crawl(spark, cfg, wd)
     return pipeline.read_parsed(spark, wd)
 
 

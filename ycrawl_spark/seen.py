@@ -1,20 +1,28 @@
-"""URL-seen membership: partitioned Bloom filter + exact anti-join.
+"""URL-seen membership: Bloom / cuckoo filter primitives + exact joins.
 
 Reference analog: the coordinator lists today's GCS blobs and splits
 them into completed / error / forfeit name lists, then does O(n·m)
 python list membership (`/root/reference/Coordinator/main.py:8-25,68`).
 
-Engine design (north_rule): the seen set is a DataFrame; membership is
-  1. a Bloom pre-filter — per-bucket shards built by a grouped
-     applyInPandas aggregation, OR-merged and broadcast per epoch —
-     which passes *definitely-unseen* rows through with zero join, and
-  2. an exact ``left_anti`` join only for the maybe-hits (Bloom false
-     positives are re-checked; false negatives are impossible).
+Engine design: the seen set is a DataFrame derived from the
+append-only fetch_log, and the crawl tests membership once per
+(re)entry with ONE exact left join against it (``join_seen_state``,
+called by ``pipeline.apply_seen_state``); the epoch loop carries the
+live pending set exactly and never re-tests it, so no filter is built
+or probed on the crawl path.
 
-A cuckoo filter (deletable fingerprints) is provided for the retry
-re-arm path where keys must leave the filter; at engine level we avoid
-deletions entirely by deriving the seen set from the append-only
-fetch_log, so the cuckoo variant is a tested fallback, not the hot path.
+The filter primitives stay for membership at scales the exact join
+cannot serve alone, each tested against the exact anti-join:
+  1. ``Bloom`` — a driver-held bitset built by a grouped applyInPandas
+     aggregation and broadcast (``build_bloom``, ``add_keys_to_bloom``,
+     ``anti_join_unseen``): definitely-unseen rows pass with zero join,
+     only maybe-hits take the exact ``left_anti`` join (false positives
+     are re-checked; false negatives are impossible);
+  2. the sharded Bloom (``build_sharded_bloom``, ``update_sharded_bloom``,
+     ``sharded_maybe_tag``) for filters that outgrow a broadcast;
+  3. ``Cuckoo`` (deletable fingerprints) for a retry re-arm path where
+     keys must leave the filter — the engine avoids deletions by
+     deriving the seen set from the append-only fetch_log.
 """
 
 from __future__ import annotations
@@ -83,9 +91,9 @@ def add_keys_to_bloom(bloom: Bloom, keys_df: DataFrame, key_col: str,
     """OR a DataFrame of keys into an existing (pre-sized) Bloom —
     distributed: shard by key hash, per-shard grouped aggregation yields
     one bits-row each, driver OR-merges. This is the INCREMENTAL path:
-    per epoch only the delta's keys are hashed (O(delta)), instead of
-    rebuilding the filter over the whole seen set (O(seen) per epoch →
-    quadratic over a crawl)."""
+    only the delta's keys are hashed (O(delta)), instead of rebuilding
+    the filter over the whole seen set (O(seen) per update → quadratic
+    over a crawl)."""
     m, k = bloom.m, bloom.k
 
     def shard_agg(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -107,8 +115,7 @@ def add_keys_to_bloom(bloom: Bloom, keys_df: DataFrame, key_col: str,
 def build_bloom(seen_keys: DataFrame, key_col: str, n_items_hint: int, n_shards: int = 32,
                 fpp: float = 0.01) -> Bloom:
     """Distributed one-shot Bloom build (sized from the hint) over an
-    existing key set; the regenerate-mode epoch loop feeds its filter
-    with ``add_keys_to_bloom`` instead."""
+    existing key set; ``add_keys_to_bloom`` grows a filter in place."""
     merged = Bloom.sized_for(max(n_items_hint, 1), fpp)
     add_keys_to_bloom(merged, seen_keys, key_col, n_shards)
     return merged
@@ -145,57 +152,27 @@ def anti_join_unseen(candidates: DataFrame, seen: DataFrame, key_col: str = "key
 
 
 def join_seen_state(candidates: DataFrame, seen_agg: DataFrame,
-                    key_col: str = "key", bloom: Bloom | None = None,
+                    key_col: str = "key",
                     broadcast_state: bool = False) -> DataFrame:
     """Attach crawl state (done, err_count) from the compacted seen_agg
-    to every candidate in ONE equi-join, bloom-gated when a ``bloom``
-    is given (exact left join otherwise).
-
-    The Bloom filter is built over *attempted* keys (any fetch_log row).
-    Definite-new candidates bypass the join entirely and get
-    (done=0, err_count=0); only maybe-hits shuffle into the join.
-    False positives resolve naturally: the left join finds no state row
-    and the fill gives (0, 0). Replaces the anti-join + attempts-join
-    pair with a single shuffle of the (small) maybe subset.
-    """
+    to every candidate in ONE exact left join; candidates with no state
+    row get (done=0, err_count=0)."""
     state = seen_agg.select(
         key_col,
         F.col("done").cast("int").alias("done"),
         F.col("err_count").cast("long").alias("err_count"),
     )
     if broadcast_state:
-        # Caller knows the state is small (below the Bloom threshold):
-        # hint it explicitly so the left join never falls back to a
-        # sort-merge that shuffles the frontier side every epoch.
+        # Caller knows the state is small: hint it explicitly so the
+        # left join never falls back to a sort-merge that shuffles the
+        # frontier side.
         state = F.broadcast(state)
-
-    def _fill(df: DataFrame) -> DataFrame:
-        return df.withColumn("done", F.coalesce(F.col("done"), F.lit(0))).withColumn(
-            "err_count", F.coalesce(F.col("err_count"), F.lit(0).cast("long"))
-        )
-
-    if bloom is None:
-        return _fill(candidates.join(state, key_col, "left"))
-
-    bc = candidates.sparkSession.sparkContext.broadcast(
-        (bloom.m, bloom.k, bloom.to_bytes())
+    return (
+        candidates.join(state, key_col, "left")
+        .withColumn("done", F.coalesce(F.col("done"), F.lit(0)))
+        .withColumn("err_count",
+                    F.coalesce(F.col("err_count"), F.lit(0).cast("long")))
     )
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(s: pd.Series) -> pd.Series:
-        m, k, raw = bc.value
-        b = Bloom.from_bytes(m, k, raw)
-        return pd.Series(b.contains_many(s.tolist()))
-
-    tagged = candidates.withColumn("_maybe", maybe_seen(F.col(key_col)))
-    definite_new = (
-        tagged.filter(~F.col("_maybe"))
-        .drop("_maybe")
-        .withColumn("done", F.lit(0))
-        .withColumn("err_count", F.lit(0).cast("long"))
-    )
-    maybe = _fill(tagged.filter(F.col("_maybe")).drop("_maybe").join(state, key_col, "left"))
-    return definite_new.unionByName(maybe)
 
 
 class Cuckoo:
@@ -255,14 +232,14 @@ class Cuckoo:
 # ───────────────── partitioned (sharded) Bloom — 10^10 path ─────────────────
 #
 # The driver-held Bloom above broadcasts the WHOLE bitset to every
-# executor each epoch — right up to the point where the filter outgrows
+# executor on each probe — right up to the point where the filter outgrows
 # a broadcast (10^10 keys ≈ 12 GB at 1% fpp). The sharded layout keeps
 # the north_rule's scale: keys shard by xxhash64(key) % n_shards, each
 # shard is an independently-sized Bloom stored as ONE row
 # (shard, m, k, bits); the membership test co-groups candidates with
 # their shard row (cogrouped applyInPandas), so a task ever holds just
 # its shard's bits (total_bits / n_shards), never the full filter — and
-# an epoch update rewrites only the shards its delta touches.
+# an update rewrites only the shards its delta touches.
 
 
 def shard_col(key_col: str, n_shards: int):
@@ -330,7 +307,7 @@ def sharded_maybe_tag(candidates: DataFrame, shards: DataFrame,
     """candidates + ``_maybe`` boolean: Bloom verdict from the row's own
     shard only. Co-grouped by shard id — the shuffle moves candidate
     rows and ONE bits-row per shard; no broadcast of the filter at all.
-    False negatives impossible; maybe-hits take the exact join upstream.
+    False negatives impossible; maybe-hits need the exact check.
     """
     from pyspark.sql.types import BooleanType, StructField, StructType
 
@@ -357,35 +334,3 @@ def sharded_maybe_tag(candidates: DataFrame, shards: DataFrame,
         .applyInPandas(check, schema=out_schema)
         .drop("_shard")
     )
-
-
-def join_seen_state_sharded(candidates: DataFrame, seen_agg: DataFrame,
-                            shards: DataFrame, n_shards: int,
-                            key_col: str = "key",
-                            broadcast_state: bool = False) -> DataFrame:
-    """``join_seen_state`` with the partitioned-Bloom gate: the maybe
-    verdict comes from the row's own shard (no filter broadcast), then
-    only maybe-hits join the compacted state. Same results as the
-    driver-Bloom and exact paths (tests assert)."""
-    state = seen_agg.select(
-        key_col,
-        F.col("done").cast("int").alias("done"),
-        F.col("err_count").cast("long").alias("err_count"),
-    )
-    if broadcast_state:
-        state = F.broadcast(state)
-    tagged = sharded_maybe_tag(candidates, shards, n_shards, key_col)
-    definite_new = (
-        tagged.filter(~F.col("_maybe"))
-        .drop("_maybe")
-        .withColumn("done", F.lit(0))
-        .withColumn("err_count", F.lit(0).cast("long"))
-    )
-    maybe = (
-        tagged.filter(F.col("_maybe")).drop("_maybe")
-        .join(state, key_col, "left")
-        .withColumn("done", F.coalesce(F.col("done"), F.lit(0)))
-        .withColumn("err_count",
-                    F.coalesce(F.col("err_count"), F.lit(0).cast("long")))
-    )
-    return definite_new.unionByName(maybe)
