@@ -84,45 +84,51 @@ def test_resume_determinism(spark, tmp_path_factory, crawl_run, monkeypatch):
     assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_full, CFG)
 
 
-def test_distributed_counter_sink_identical(spark, tmp_path_factory, crawl_run):
-    """Above cfg.counter_collect_max hosts the per-epoch lineage
-    counters append through a distributed write instead of a driver
-    collect; both paths must leave identical checkpoint-table contents
-    (and identical crawl results)."""
+def test_distributed_counter_sink_identical(spark, crawl_run):
+    """The per-epoch, per-host lineage counters append through a
+    distributed write into the ``checkpoint`` table; its rows must equal
+    the fetch_log's own per-(epoch, host) counts."""
     from ycrawl_spark.catalog import Catalog
 
-    wd_ref, _ = crawl_run  # collect path (n_hosts=12 < default max)
-    cfg = CrawlConfig(**{**CFG.__dict__, "counter_collect_max": 0})
-    wd = str(tmp_path_factory.mktemp("c_dist_counters"))
-    run_crawl(spark, cfg, wd)
-    assert crawl_order(spark, wd) == crawl_order(spark, wd_ref)
+    wd, _ = crawl_run
+    cat = Catalog(wd)
+    got = cat.table("checkpoint").read(spark)
+    assert got.columns == ["canonical_host", "fetched", "ok", "err", "epoch"]
+    want = cat.table("fetch_log").read(spark).groupBy(
+        "epoch", "canonical_host"
+    ).agg(
+        F.count("*").alias("fetched"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
+        F.sum(F.when(F.col("status") == "ERR", 1).otherwise(0)).alias("err"),
+    )
 
-    def counter_rows(w):
-        df = Catalog(w).table("checkpoint").read(spark)
+    def rows(df):
         return sorted(
             (r["canonical_host"], r["epoch"], r["fetched"], r["ok"], r["err"])
             for r in df.collect()
         )
 
-    assert counter_rows(wd) == counter_rows(wd_ref)
+    assert rows(got) == rows(want)
 
 
-def test_log_compaction_mode_identical(spark, tmp_path_factory, crawl_run):
+def test_log_compaction_mode_identical(spark, tmp_path_factory, crawl_run,
+                                       monkeypatch):
     """Crawling with per-3-epoch fetch_log compaction yields the exact
     same crawl order + seen sets, keeps resume idempotent (selects 0 on
     a finished workdir), and actually compacts (few live snapshots)."""
+    from ycrawl_spark import pipeline
     from ycrawl_spark.catalog import Catalog
 
     wd_full, _ = crawl_run
     wd = str(tmp_path_factory.mktemp("crawl_compact"))
-    cfg = CrawlConfig(**{**CFG.__dict__, "log_compact_every": 3})
-    stats = run_crawl(spark, cfg, wd)
+    monkeypatch.setattr(pipeline, "LOG_COMPACT_EVERY", 3)
+    stats = run_crawl(spark, CFG, wd)
     assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
-    assert seen_sets(spark, wd, cfg) == seen_sets(spark, wd_full, CFG)
+    assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_full, CFG)
     n_epochs = len([s for s in stats if s.n_selected > 0])
     n_snaps = len(Catalog(wd).table("fetch_log").snapshots())
     assert n_snaps < n_epochs  # compaction really ran
-    again = run_crawl(spark, cfg, wd, resume=True)
+    again = run_crawl(spark, CFG, wd, resume=True)
     assert sum(s.n_selected for s in again) == 0
 
 

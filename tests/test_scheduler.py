@@ -5,7 +5,6 @@ from pyspark.sql import Window as W, functions as F
 from ycrawl_spark.config import CrawlConfig
 from ycrawl_spark.scheduler import (
     ORDER_COLS,
-    batch_mod_filter,
     select_per_host_budget,
     with_global_pos,
 )
@@ -70,11 +69,3 @@ def test_mid_consecutive_within_partition(spark):
     )
     assert parts and all(r["n"] == r["span"] for r in parts)
 
-
-def test_batch_mod_filter(spark):
-    df = spark.createDataFrame([(f"20260816_H{i:04d}",) for i in range(1, 101)],
-                               "key string")
-    parts = [batch_mod_filter(df, b, 4).count() for b in range(4)]
-    assert sum(parts) == 100
-    got = {r["key"] for r in batch_mod_filter(df, 2, 4).collect()}
-    assert got == {f"20260816_H{i:04d}" for i in range(1, 101) if i % 4 == 2}

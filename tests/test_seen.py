@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -54,9 +56,10 @@ def test_sharded_bloom_matches_exact_antijoin(spark):
     """The partitioned-Bloom membership gate (cogrouped applyInPandas,
     no filter broadcast) must reproduce the exact anti-join result:
     false negatives impossible, false positives resolved by the exact
-    re-check — same contract as the driver Bloom."""
-    from ycrawl_spark.seen import (build_sharded_bloom, sharded_maybe_tag,
-                                   shard_col)
+    re-check — same contract as the driver Bloom. The grouped
+    ``applyInPandas`` functions carry type hints, so PySpark infers
+    their eval type without a "Cannot infer the eval type" warning."""
+    from ycrawl_spark.seen import build_sharded_bloom, sharded_maybe_tag
 
     seen = spark.createDataFrame(
         [(f"k{i}",) for i in range(0, 2000, 2)], "key string"
@@ -64,9 +67,11 @@ def test_sharded_bloom_matches_exact_antijoin(spark):
     cand = spark.createDataFrame(
         [(f"k{i}",) for i in range(1500, 2500)], "key string"
     )
-    shards = build_sharded_bloom(seen, n_items_hint=1000, n_shards=16)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        shards = build_sharded_bloom(seen, n_items_hint=1000, n_shards=16)
+        tagged = sharded_maybe_tag(cand, shards, 16)
     assert shards.count() <= 16
-    tagged = sharded_maybe_tag(cand, shards, 16)
     # no false negatives: every truly-seen candidate is flagged maybe
     missed = (
         tagged.join(seen, "key", "left_semi")

@@ -457,9 +457,9 @@ class Table:
     def append_pdf(self, pdf, epoch: int | None = None,
                    meta: dict | None = None) -> str:
         """Append a small driver-side pandas frame as a snapshot via a
-        direct pyarrow write — no Spark job. Used for tiny per-epoch
-        metadata (checkpoint counters) where a full distributed write
-        would cost a scheduler round-trip for a handful of rows."""
+        direct pyarrow write — no Spark job, for a handful of rows where
+        a distributed write would cost a scheduler round-trip. The crawl
+        loop does not use it: its per-host counters stay distributed."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 

@@ -9,11 +9,14 @@ at runtime.
 The engine has one frontier mode (pipeline.py): the live pending set is
 carried exactly across epochs, and the URL-seen test is one exact
 state join per (re)entry, so no knob here picks a mode or a filter.
+The engine's own bookkeeping cadences (``pipeline.LOG_COMPACT_EVERY``,
+``pipeline.DISCOVERY_FLUSH_EVERY``) are constants, not fields: a field
+here describes the crawl, not a choice between implementations of it.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -49,16 +52,6 @@ class CrawlConfig:
     # broadcast (a serial driver collect), it scales with executors.
     state_broadcast_max: int = 100_000
 
-    # fetch_log small-file compaction cadence (0 = off): every K epochs
-    # the log's per-epoch snapshots are rewritten into one (see
-    # catalog.Table.compact). At 10^3+ epochs this bounds manifest
-    # growth and file-open fan-in; results are provably unchanged
-    # (equivalence asserted in tests/test_crawl_e2e.py). Default ON at
-    # 50: a 10^3-epoch crawl carries ≤50 live snapshots instead of 10^3,
-    # while short crawls (< 50 epochs, incl. the bench) never pay the
-    # rewrite; measured cost at cadence 3 in BASELINE.md.
-    log_compact_every: int = 50
-
     # Mid-crawl link discovery (north_rule: the priority queue orders by
     # "priority, depth, discovery-time" — with discovery on, depth and
     # discovered_ts are real frontier DYNAMICS, not static seed
@@ -77,29 +70,10 @@ class CrawlConfig:
     discovery_fanout: int = 0
     discovery_max_depth: int = 3
     n_seed_urls: int | None = None
-    # Discovered rows APPEND to the frontier table in batches of K
-    # epochs (1 = every epoch). Novel rows are localCheckpoint-pinned
-    # the epoch they surface — the batch only defers the durable write,
-    # and the crash window costs nothing because the fetch_log (committed
-    # every epoch) is the source of truth: rebuild_discovered_frontier
-    # re-derives ANY number of lost discovery appends on resume. Each
-    # deferred append is one fewer fixed-cost driver job per epoch —
-    # the term that erodes N→4N scaling efficiency when epochs are
-    # data-light.
-    discovery_flush_every: int = 8
 
     # Robots: hosts whose path prefix is disallowed are excluded at
     # frontier build (north_rule robots budget).
     robots_disallow: tuple[str, ...] = ("/private/",)
-
-    # Per-epoch per-host lineage counters: below this host count they
-    # collect to the driver and append as one tiny parquet (no Spark
-    # write job — cheapest for the sandbox's 10^4 hosts); above it the
-    # counters stay distributed and append through a regular Spark
-    # write, because a 10^8-host collect would be a driver OOM.
-    counter_collect_max: int = 100_000
-
-    extra: dict = field(default_factory=dict, compare=False)
 
     @property
     def shuffle_salt(self) -> str:

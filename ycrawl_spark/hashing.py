@@ -98,22 +98,6 @@ def xxh64_signed(s: str, seed: int = SPARK_XXHASH64_SEED) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def xxh64_str_array(values, seed: int = SPARK_XXHASH64_SEED) -> np.ndarray:
-    """Vectorized-ish helper: unsigned XXH64 per string (int64 view)."""
-    out = np.empty(len(values), dtype=np.uint64)
-    for j, s in enumerate(values):
-        out[j] = xxh64_str(s, seed)
-    return out
-
-
-def shuffle_rank_py(key: str, salt: str) -> int:
-    """Simulator-side crawl-shuffle rank (signed, matches Spark column).
-
-    Spark side: ``F.xxhash64(F.concat(col('key'), lit(':'), lit(salt)))``.
-    """
-    return xxh64_signed(f"{key}:{salt}")
-
-
 def bloom_positions(hashes_a: np.ndarray, hashes_b: np.ndarray, k: int, m: int) -> np.ndarray:
     """Double-hashing position scheme g_i(x) = (a + i*b) mod m.
 

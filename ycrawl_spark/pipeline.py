@@ -14,7 +14,7 @@ as catalog appends. **All crawl state derives from the append-only
 after a kill is trivially deterministic: re-read fetch_log, recompute
 state, continue with the next epoch. That is the checkpoint/lineage
 story the north_rule asks for; the ``checkpoint`` table additionally
-records per-epoch, per-partition counters for observability.
+records per-epoch, per-host counters for observability.
 
 One frontier mode. The URL-seen membership test runs once per
 (re)entry, where membership is actually unknown (resume, ingested
@@ -22,23 +22,31 @@ frontier rows): the exact left join of the frontier against the
 fetch_log-derived state (``apply_seen_state``). From there the live
 pending set is carried exactly across epochs (budget losers ∪
 retryable errors ∪ discovered children), so the steady-state loop runs
-no seen-set join and builds no filter, and each epoch is FOUR jobs,
-none of them O(frontier) after epoch 1 (driver-side fixed cost is what
-kills N→4N scaling efficiency, measured via the phase profile):
-  1. rank localCheckpoint: politeness windows materialized once; both
-     the selected set and next epoch's survivors are cheap filters of
-     it (+ a near-free count on the materialized blocks that
-     right-sizes the fetch stage);
-  2. ONE heavy job: fused fetch+parse+validate (Arrow stage) → single
-     wide ``fetch_log`` append. Epoch totals ride the same job via
-     ``Observation``; validation needs no join — expected metadata
-     rides the frontier (fetch.REF_COLS, joined from the images table
-     once at crawl start);
-  3. per-host lineage counters: tiny columnar scan of the just-written
-     snapshot → driver-side parquet (no Spark write job);
-  4. next pending localCheckpoint: budget losers ∪ retryable errors
-     (frontier columns echoed on ERR rows — fetch.ECHO_COLS — so the
-     retry path is a projection of the epoch delta, not a join).
+no seen-set join and builds no filter. A steady-state epoch without
+discovery is FIVE jobs, none of them O(frontier) after epoch 1
+(driver-side fixed cost is what kills N→4N scaling efficiency); the
+list is read off the event log of a traced resume-recrawl run:
+  1. broadcast of the politeness dim for the rank join;
+  2. rank localCheckpoint: politeness windows materialized once; both
+     the selected set and the budget losers are cheap filters of it,
+     and its row count rides an ``Observation``;
+  3. ONE heavy job: shuffle-order exchange, then fused
+     fetch+parse+validate (Arrow stage) → single wide ``fetch_log``
+     append. Epoch totals ride the same job via ``Observation``;
+     validation needs no join — expected metadata rides the frontier
+     (fetch.REF_COLS, joined from the images table once at crawl
+     start);
+  4. the read-back's parquet schema inference (a footer-read job) over
+     the just-written snapshot;
+  5. per-host lineage counters: partial aggregation of that snapshot →
+     distributed ``checkpoint`` append.
+The next pending set (budget losers ∪ retryable errors, frontier
+columns echoed on ERR rows — fetch.ECHO_COLS — so the retry path is a
+projection of the epoch delta, not a join) stays lazy: the next rank
+checkpoint materializes it. Epoch 1 of a (re)entry adds the broadcast
+builds of its one-time joins, and the last epoch runs jobs 1–2 only
+(the traced run averages 5.25 jobs per epoch over 4 epochs). With
+discovery on, the novel-rows checkpoint adds one job (``_discover``).
 """
 
 from __future__ import annotations
@@ -64,6 +72,17 @@ PENDING_COLS = [
     "discovered_ts", "image_id", "epoch_added", "robots_ok",
     "w_ref", "h_ref", "fmt_ref", "caption_ref", "phash_ref",
 ]
+
+# fetch_log small-file compaction cadence: every K epochs the log's
+# per-epoch snapshots are rewritten into one (catalog.Table.compact). A
+# 10^3-epoch crawl carries ≤50 live snapshots instead of 10^3, while
+# short crawls (< 50 epochs, incl. the bench) never pay the rewrite;
+# measured cost at cadence 3 in BASELINE.md.
+LOG_COMPACT_EVERY = 50
+
+# Discovered rows append to the frontier table in batches of K epochs
+# (see DiscoveryBuffer for why deferring the append is crash-safe).
+DISCOVERY_FLUSH_EVERY = 8
 
 
 class _phase:
@@ -146,13 +165,14 @@ def _fetch_commit(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
     n_parts = max(1, min(n_cand // 3000 + 1,
                          4 * spark.sparkContext.defaultParallelism))
     fp = fetch_mod.fetch_parse_stage(ordered, cfg, epoch, n_parts=n_parts)
-    obs = Observation(f"epoch_{epoch}")
-    fp = fp.observe(
-        obs,
+    # fetched / ok / err: the epoch totals and, per host, the counters.
+    totals = [
         F.count(F.lit(1)).alias("fetched"),
         F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
         F.sum(F.when(F.col("status") == "ERR", 1).otherwise(0)).alias("err"),
-    )
+    ]
+    obs = Observation(f"epoch_{epoch}")
+    fp = fp.observe(obs, *totals)
     with _phase(epoch, "fetch_append"):
         snap_id = cat.table("fetch_log").append(fp, epoch=epoch)
         m = obs.get
@@ -168,29 +188,14 @@ def _fetch_commit(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
                        int(m["ok"] or 0), int(m["err"] or 0))
 
     delta = cat.table("fetch_log").read_snapshot(spark, snap_id)
-    counters = delta.groupBy("canonical_host").agg(
-        F.count("*").alias("fetched"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-        F.sum(F.when(F.col("status") == "ERR", 1).otherwise(0)).alias("err"),
-    )
+    # Counters stay on the executors (partial aggregation, then a
+    # distributed append): a driver collect of 10^8 hosts would be an OOM.
+    counters = delta.groupBy("canonical_host").agg(*totals)
     with _phase(epoch, "counters"):
-        if cfg.n_hosts > cfg.counter_collect_max:
-            # Web-scale host cardinality: the counters never visit the
-            # driver — distributed append (same schema, same table).
-            cat.table("checkpoint").append(
-                counters.withColumn("epoch", F.lit(epoch).cast("long")),
-                epoch=epoch,
-            )
-        else:
-            counter_rows = counters.collect()
-            cat.table("checkpoint").append_pdf(
-                pd.DataFrame(
-                    [(r["canonical_host"], r["fetched"], r["ok"], r["err"], epoch)
-                     for r in counter_rows],
-                    columns=["canonical_host", "fetched", "ok", "err", "epoch"],
-                ),
-                epoch=epoch,
-            )
+        cat.table("checkpoint").append(
+            counters.withColumn("epoch", F.lit(epoch).cast("long")),
+            epoch=epoch,
+        )
     return stats, delta
 
 
@@ -234,8 +239,8 @@ def _child_rows(kids: DataFrame, cfg: CrawlConfig) -> DataFrame:
 
 class DiscoveryBuffer:
     """Novel frontier rows accumulated across epochs, appended to the
-    frontier table every ``flush_every`` epochs instead of every epoch.
-    Rows are already localCheckpoint-pinned when they arrive (the same
+    frontier table every ``DISCOVERY_FLUSH_EVERY`` epochs instead of
+    every epoch. Rows are already localCheckpoint-pinned when they arrive (the same
     materialization the pending set needs anyway), so deferring the
     append removes one fixed-cost driver job per epoch without losing
     anything on a crash: the fetch_log commits every epoch and
@@ -243,8 +248,7 @@ class DiscoveryBuffer:
     discovery appends from it on resume. Unflushed keys still count as
     "entered" for novelty tests via ``extra_entered``."""
 
-    def __init__(self, flush_every: int):
-        self.flush_every = max(1, int(flush_every))
+    def __init__(self):
         self.parts: list[DataFrame] = []
 
     def add(self, rows: DataFrame) -> None:
@@ -254,7 +258,7 @@ class DiscoveryBuffer:
         return self.parts
 
     def flush(self, cat: Catalog, epoch: int, force: bool = False) -> None:
-        if not self.parts or not (force or epoch % self.flush_every == 0):
+        if not self.parts or not (force or epoch % DISCOVERY_FLUSH_EVERY == 0):
             return
         df = self.parts[0]
         for p in self.parts[1:]:
@@ -308,7 +312,8 @@ def _discover(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
     the known ok count (n_kids ≤ n_ok · fanout), its broadcast build
     side derives child keys as a pure column expression (the pandas
     row builder runs once, probe side), and the durable frontier
-    append amortizes to 1/flush_every per epoch via the buffer."""
+    append amortizes to 1/DISCOVERY_FLUSH_EVERY per epoch via the
+    buffer."""
     if n_ok == 0:
         return None, 0
     parents = delta.filter(
@@ -387,7 +392,7 @@ def rebuild_discovered_frontier(spark: SparkSession, cat: Catalog,
 
 def run_epoch_incremental(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
                           pending: DataFrame, politeness: DataFrame,
-                          epoch: int, hot_hosts: list[str] | None,
+                          epoch: int, hot_hosts: list[str],
                           images_ref: DataFrame | None = None,
                           buffer: DiscoveryBuffer | None = None,
                           ) -> tuple[EpochStats, DataFrame]:
@@ -538,7 +543,7 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     max_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     stats: list[EpochStats] = []
-    disc_buffer = DiscoveryBuffer(cfg.discovery_flush_every)
+    disc_buffer = DiscoveryBuffer()
     last_epoch = start_epoch
     for epoch in range(start_epoch, cfg.max_epochs + 1):
         last_epoch = epoch
@@ -558,11 +563,11 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
         n_pending_est = max(
             st.n_candidates - st.n_selected + st.n_err, 1
         ) + st.n_discovered
-        # fetch_log small-file compaction (opt-in): epoch-per-snapshot
-        # appends are rewritten into one snapshot every K epochs —
-        # bounded manifest/file-count at 10^3+-epoch crawls, content
+        # fetch_log small-file compaction: epoch-per-snapshot appends
+        # are rewritten into one snapshot every LOG_COMPACT_EVERY epochs
+        # — bounded manifest/file-count at 10^3+-epoch crawls, content
         # provably unchanged (latest_epoch preserved for resume).
-        if cfg.log_compact_every and epoch % cfg.log_compact_every == 0:
+        if epoch % LOG_COMPACT_EVERY == 0:
             # pending's retry branch is a LAZY projection of this
             # epoch's fetch_log snapshot; compaction rewrites those
             # files, so pin pending first. Costs one job only on the
@@ -631,16 +636,12 @@ def crawl_order(spark: SparkSession, workdir: str) -> list[str]:
 
 def seen_sets(spark: SparkSession, workdir: str, cfg: CrawlConfig) -> tuple[set, set]:
     """(done_keys, forfeit_keys) from fetch_log."""
-    log = Catalog(workdir).table("fetch_log").read(spark)
-    agg = log.groupBy("key").agg(
-        F.max(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("done"),
-        F.sum(F.when(F.col("status") == "ERR", 1).otherwise(0)).alias("errs"),
-    )
+    agg = _agg_from_log(Catalog(workdir).table("fetch_log").read(spark))
     done = {r["key"] for r in agg.filter("done = 1").select("key").collect()}
     forfeit = {
         r["key"]
         for r in agg.filter(
-            (F.col("done") == 0) & (F.col("errs") >= cfg.max_retry)
+            (F.col("done") == 0) & (F.col("err_count") >= cfg.max_retry)
         ).select("key").collect()
     }
     return done, forfeit

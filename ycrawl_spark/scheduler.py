@@ -47,8 +47,7 @@ def hot_hosts_of(frontier: DataFrame, cfg: CrawlConfig) -> list[str]:
 
 
 def rank_per_host(candidates: DataFrame, politeness: DataFrame,
-                  cfg: CrawlConfig,
-                  hot_hosts: list[str] | None = None) -> DataFrame:
+                  cfg: CrawlConfig, hot_hosts: list[str]) -> DataFrame:
     """Rank every candidate within its host's politeness budget WITHOUT
     dropping the losers: returns all input rows plus ``host_rank``
     (null for rows pruned in phase 1 — they can't be in the host's
@@ -59,8 +58,8 @@ def rank_per_host(candidates: DataFrame, politeness: DataFrame,
     every epoch.
 
     ``politeness``: (canonical_host, max_per_epoch, ...) small dim →
-    broadcast join. ``hot_hosts``: precomputed salting list (see
-    ``hot_hosts_of``); None → detect dynamically from the candidates.
+    broadcast join. ``hot_hosts``: the salting list, computed once per
+    crawl by ``hot_hosts_of``.
     """
     withb = candidates.join(
         F.broadcast(politeness.select("canonical_host", "max_per_epoch")),
@@ -72,18 +71,11 @@ def rank_per_host(candidates: DataFrame, politeness: DataFrame,
     )
 
     # Hot-host salting (explicit salting of hot hosts, north_rule).
-    if hot_hosts is None:
-        counts = withb.groupBy("canonical_host").agg(F.count("*").alias("_host_n"))
-        hot = counts.filter(F.col("_host_n") > cfg.hot_host_threshold).select(
-            "canonical_host", F.lit(True).alias("_hot")
-        )
-        withb = withb.join(F.broadcast(hot), "canonical_host", "left")
-    else:
-        withb = withb.withColumn(
-            "_hot",
-            F.when(F.col("canonical_host").isin(*hot_hosts), F.lit(True))
-            if hot_hosts else F.lit(None).cast("boolean"),
-        )
+    withb = withb.withColumn(
+        "_hot",
+        F.when(F.col("canonical_host").isin(*hot_hosts), F.lit(True))
+        if hot_hosts else F.lit(None).cast("boolean"),
+    )
     salted = withb.withColumn(
         "_salt",
         F.when(
@@ -109,8 +101,8 @@ def rank_per_host(candidates: DataFrame, politeness: DataFrame,
     # second full shuffle that recomputes what phase 1 proved (the
     # dominant per-epoch fixed cost on a crawl with no hot hosts, which
     # is the steady state: salting is the exception, not the rule).
-    if hot_hosts is not None and not hot_hosts:
-        # Statically known: nothing is salted — one shuffle total.
+    if not hot_hosts:
+        # Nothing is salted — one shuffle total.
         ranked = survivors.withColumn("host_rank", F.col("_r1")).drop(
             "_r1", "_salt", "_hot")
     else:
@@ -136,12 +128,13 @@ def is_selected():
 
 
 def select_per_host_budget(candidates: DataFrame, politeness: DataFrame,
-                           cfg: CrawlConfig,
-                           hot_hosts: list[str] | None = None) -> DataFrame:
+                           cfg: CrawlConfig) -> DataFrame:
     """Top-``max_per_epoch`` candidates per host this epoch — the
-    filtered view of ``rank_per_host`` (identical selected set)."""
+    filtered view of ``rank_per_host`` (identical selected set), with
+    the candidates' own hot hosts salted."""
     return (
-        rank_per_host(candidates, politeness, cfg, hot_hosts)
+        rank_per_host(candidates, politeness, cfg,
+                      hot_hosts_of(candidates, cfg))
         .filter(is_selected())
         .drop("max_per_epoch")
     )
@@ -212,13 +205,3 @@ def with_global_pos(df: DataFrame, order_cols: list[str], out_col: str = "pos") 
         .drop("_pid", "_mid", "_off", "_min_mid")
     )
 
-
-def batch_mod_filter(df: DataFrame, batch: int, total_batches: int,
-                     key_col: str = "key") -> DataFrame:
-    """Reference worker sharding: ``int(key[-4:]) % total == batch``
-    (Coordinator/main.py:74-75) — kept for parity queries; engine-wide
-    sharding is host-bucket based instead."""
-    return df.filter(
-        F.pmod(F.substring(F.col(key_col), -4, 4).cast("int"), F.lit(total_batches))
-        == F.lit(batch)
-    )

@@ -255,7 +255,7 @@ def build_sharded_bloom(keys_df: DataFrame, n_items_hint: int,
     proto = Bloom.sized_for(max(n_items_hint // n_shards, 1), fpp)
     m, k = proto.m, proto.k
 
-    def shard_agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def shard_agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         b = Bloom(m, k)
         b.add_many(pdf[key_col].tolist())
         return pd.DataFrame(
@@ -281,7 +281,7 @@ def update_sharded_bloom(shards: DataFrame, delta_keys: DataFrame,
                          "use build_sharded_bloom first")
     m, k = int(m_k["m"]), int(m_k["k"])
 
-    def merge(key, cand: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, cand: pd.DataFrame, old: pd.DataFrame) -> pd.DataFrame:
         if len(cand) == 0:
             return old[["shard", "m", "k", "bits"]]  # clean shard: unchanged
         b = Bloom(m, k)
@@ -317,7 +317,7 @@ def sharded_maybe_tag(candidates: DataFrame, shards: DataFrame,
     )
     cols = [f.name for f in out_schema.fields]
 
-    def check(key, cdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
+    def check(key: tuple, cdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
         if len(cdf) == 0:
             return pd.DataFrame(columns=cols)
         if len(sdf) == 0:  # no shard row yet: nothing seen in this shard

@@ -124,11 +124,6 @@ def discovered_row(i: int, depth: int, epoch: int, cfg: CrawlConfig) -> dict:
     return row
 
 
-def images_pdf(cfg: CrawlConfig, start: int = 0, stop: int | None = None) -> pd.DataFrame:
-    stop = cfg.n_urls if stop is None else stop
-    return pd.DataFrame([codecs.make_image_row(image_id_for(i)) for i in range(start, stop)])
-
-
 def images_df(spark, cfg: CrawlConfig, with_bytes: bool = True):
     """Distributed image-table build with the exact input_hint schema.
 

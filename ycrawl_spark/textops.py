@@ -407,25 +407,6 @@ def ngram_shared_pairs(df: DataFrame, k: int = 4, min_common: int = 1,
     )
 
 
-def ngram_jaccard(df: DataFrame, pairs: DataFrame, k: int = 4,
-                  text_col: str = "text") -> DataFrame:
-    """Exact Jaccard over shingle sets for candidate pairs."""
-    sets_df = with_tokens(df, text_col).select(
-        "doc_id", F.array_distinct(shingles_col("tokens", k)).alias("sset")
-    )
-    j = (
-        pairs.join(sets_df.withColumnRenamed("doc_id", "doc_a")
-                   .withColumnRenamed("sset", "set_a"), "doc_a")
-        .join(sets_df.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("sset", "set_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size(F.array_union("set_a", "set_b"))
-    return j.select(
-        "doc_a", "doc_b", F.round(inter / union, 4).alias("jaccard")
-    )
-
-
 def containment_dedup(df: DataFrame, k: int = 4, min_pct: int = 50,
                       min_shingles: int = 3, text_col: str = "text",
                       bucket_cap: int | None = 10_000) -> DataFrame:

@@ -79,21 +79,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return np.random.Generator(np.random.PCG64(seed)).standard_normal((n_planes, dim))
 
 
-def lsh_bucket_col(emb_col: str, planes: np.ndarray):
-    """Signed-random-projection bucket id, JVM-side: sign bits of the
-    dot products with fixed hyperplanes (literal arrays → zip_with)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(v)) for v in p])
-        dot = F.aggregate(
-            F.zip_with(_as_double(emb_col), plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def lsh_table_buckets_udf(dim: int, n_tables: int, n_planes: int,
                           seed: int = 42):
     """Vectorized pandas UDF: all per-table bucket ids in ONE numpy
