@@ -76,8 +76,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from ycrawl_spark.session import get_spark
 
-    spark = get_spark(cores=8, shuffle_partitions=8, driver_memory="16g",
-                      app_name="check_oracle")
+    spark = get_spark(shuffle_partitions=8, app_name="check_oracle")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

@@ -72,8 +72,7 @@ def main() -> None:
     from ycrawl_spark import graph, textops
     from ycrawl_spark.session import get_spark
 
-    spark = get_spark(cores=32, shuffle_partitions=32,
-                      app_name="probe_dedup_scale",
+    spark = get_spark(app_name="probe_dedup_scale",
                       extra_conf={"spark.ui.enabled": "true"})
     ui = "http://localhost:4040"
     try:

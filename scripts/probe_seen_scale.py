@@ -53,8 +53,7 @@ def main() -> None:
     from ycrawl_spark import seen
     from ycrawl_spark.session import get_spark
 
-    spark = get_spark(cores=32, shuffle_partitions=32,
-                      app_name="probe_seen_scale",
+    spark = get_spark(app_name="probe_seen_scale",
                       extra_conf={"spark.ui.enabled": "true"})
     ui = "http://localhost:4040"
     try:

@@ -2,11 +2,13 @@
 # Package the engine and run the crawl via spark-submit --py-files —
 # the same ship shape a real cluster uses (swap --master for YARN/K8s).
 #
-#   scripts/submit.sh [--master local[8]] -- --workdir /tmp/crawl --n-urls 5000
+#   scripts/submit.sh [--master local[N]] -- --workdir /tmp/crawl --n-urls 5000
+#
+# --master defaults to local[<nproc>]: one task slot per host CPU.
 set -euo pipefail
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-MASTER="local[8]"
+MASTER="local[$(nproc)]"
 if [[ "${1:-}" == "--master" ]]; then
   MASTER="$2"; shift 2
 fi

@@ -84,13 +84,11 @@ def test_resume_determinism(spark, tmp_path_factory, crawl_run, monkeypatch):
     assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_full, CFG)
 
 
-def test_distributed_counter_sink_identical(spark, crawl_run):
-    """The per-epoch, per-host lineage counters append through a
-    distributed write into the ``checkpoint`` table; its rows must equal
-    the fetch_log's own per-(epoch, host) counts."""
+def _assert_counters_match_log(spark, wd):
+    """The ``checkpoint`` table's per-(epoch, host) counters equal the
+    fetch_log's own per-(epoch, host) counts."""
     from ycrawl_spark.catalog import Catalog
 
-    wd, _ = crawl_run
     cat = Catalog(wd)
     got = cat.table("checkpoint").read(spark)
     assert got.columns == ["canonical_host", "fetched", "ok", "err", "epoch"]
@@ -111,23 +109,51 @@ def test_distributed_counter_sink_identical(spark, crawl_run):
     assert rows(got) == rows(want)
 
 
+def test_distributed_counter_sink_identical(spark, crawl_run):
+    """The per-epoch, per-host lineage counters append through a
+    distributed write into the ``checkpoint`` table; its rows must equal
+    the fetch_log's own per-(epoch, host) counts."""
+    wd, _ = crawl_run
+    _assert_counters_match_log(spark, wd)
+
+
 def test_log_compaction_mode_identical(spark, tmp_path_factory, crawl_run,
                                        monkeypatch):
-    """Crawling with per-3-epoch fetch_log compaction yields the exact
-    same crawl order + seen sets, keeps resume idempotent (selects 0 on
-    a finished workdir), and actually compacts (few live snapshots)."""
+    """Crawling with per-3-epoch compaction of fetch_log and the
+    checkpoint counters yields the exact same crawl order + seen sets,
+    keeps the counters equal to the log's, keeps resume idempotent
+    (selects 0 on a finished workdir), and actually compacts both tables
+    (few live snapshots). The crawl also leaves the session's AQE and
+    shuffle settings alone, inside every epoch and after it."""
     from ycrawl_spark import pipeline
     from ycrawl_spark.catalog import Catalog
+
+    conf_keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+    def session_conf():
+        return tuple(spark.conf.get(k) for k in conf_keys)
+
+    in_epoch = []
+    run_epoch = pipeline.run_epoch_incremental
+
+    def recording_run_epoch(*args, **kwargs):
+        in_epoch.append(session_conf())
+        return run_epoch(*args, **kwargs)
 
     wd_full, _ = crawl_run
     wd = str(tmp_path_factory.mktemp("crawl_compact"))
     monkeypatch.setattr(pipeline, "LOG_COMPACT_EVERY", 3)
+    monkeypatch.setattr(pipeline, "run_epoch_incremental", recording_run_epoch)
+    before = session_conf()
     stats = run_crawl(spark, CFG, wd)
+    assert session_conf() == before
+    assert in_epoch and set(in_epoch) == {before}
     assert crawl_order(spark, wd) == crawl_order(spark, wd_full)
     assert seen_sets(spark, wd, CFG) == seen_sets(spark, wd_full, CFG)
     n_epochs = len([s for s in stats if s.n_selected > 0])
-    n_snaps = len(Catalog(wd).table("fetch_log").snapshots())
-    assert n_snaps < n_epochs  # compaction really ran
+    for name in ("fetch_log", "checkpoint"):  # compaction really ran
+        assert len(Catalog(wd).table(name).snapshots()) < n_epochs, name
+    _assert_counters_match_log(spark, wd)
     again = run_crawl(spark, CFG, wd, resume=True)
     assert sum(s.n_selected for s in again) == 0
 

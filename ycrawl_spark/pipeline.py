@@ -22,31 +22,44 @@ frontier rows): the exact left join of the frontier against the
 fetch_log-derived state (``apply_seen_state``). From there the live
 pending set is carried exactly across epochs (budget losers ∪
 retryable errors ∪ discovered children), so the steady-state loop runs
-no seen-set join and builds no filter. A steady-state epoch without
-discovery is FIVE jobs, none of them O(frontier) after epoch 1
-(driver-side fixed cost is what kills N→4N scaling efficiency); the
-list is read off the event log of a traced resume-recrawl run:
-  1. broadcast of the politeness dim for the rank join;
-  2. rank localCheckpoint: politeness windows materialized once; both
+no seen-set join and builds no filter.
+
+The loop runs under the session's AQE, where every shuffle map stage
+and every broadcast is its own Spark job. A steady-state epoch without
+discovery is 13 jobs, none of them O(frontier) after epoch 1; the list
+is read off the event log of a traced resume-recrawl run (epochs 2–3):
+  1–3. broadcasts of the persisted politeness dim: the rank plan
+       (``scheduler.rank_per_host``) holds three copies of the
+       politeness join under the phase-1 window, one per branch of its
+       result union (cold survivors, hot re-ranked survivors, budget
+       losers), and AQE builds each copy's broadcast separately;
+  4–6. the phase-1 window's shuffle map stage, once per copy (two of
+       them write identical bytes: AQE does not reuse them);
+  7. the phase-2 (hot-host re-rank) shuffle map stage;
+  8. rank localCheckpoint: politeness windows materialized once; both
      the selected set and the budget losers are cheap filters of it,
      and its row count rides an ``Observation``;
-  3. ONE heavy job: shuffle-order exchange, then fused
-     fetch+parse+validate (Arrow stage) → single wide ``fetch_log``
-     append. Epoch totals ride the same job via ``Observation``;
-     validation needs no join — expected metadata rides the frontier
-     (fetch.REF_COLS, joined from the images table once at crawl
-     start);
-  4. the read-back's parquet schema inference (a footer-read job) over
-     the just-written snapshot;
-  5. per-host lineage counters: partial aggregation of that snapshot →
-     distributed ``checkpoint`` append.
+  9. the shuffle-order exchange's map stage;
+  10. fused fetch+parse+validate (Arrow stage) → single wide
+      ``fetch_log`` append. Epoch totals ride the same job via
+      ``Observation``; validation needs no join — expected metadata
+      rides the frontier (fetch.REF_COLS, joined from the images table
+      once at crawl start);
+  11. the read-back's parquet schema inference (a footer-read job) over
+      the just-written snapshot;
+  12–13. per-host lineage counters: partial aggregation of that
+      snapshot (a shuffle map stage) → distributed ``checkpoint``
+      append.
 The next pending set (budget losers ∪ retryable errors, frontier
 columns echoed on ERR rows — fetch.ECHO_COLS — so the retry path is a
 projection of the epoch delta, not a join) stays lazy: the next rank
-checkpoint materializes it. Epoch 1 of a (re)entry adds the broadcast
-builds of its one-time joins, and the last epoch runs jobs 1–2 only
-(the traced run averages 5.25 jobs per epoch over 4 epochs). With
-discovery on, the novel-rows checkpoint adds one job (``_discover``).
+checkpoint materializes it. Epoch 1 of a (re)entry adds the cache fill
+of the politeness dim and the broadcast builds of its one-time joins
+(18 jobs), and the last epoch, which selects nothing, runs jobs 1–6
+only: the traced run averages 12.5 jobs per epoch over 4 epochs, where
+the same epochs ran as 5.25 jobs each with AQE off, with the resume op
+time inside its run-to-run spread. With discovery on, the novel-rows
+checkpoint adds its own jobs (``_discover``).
 """
 
 from __future__ import annotations
@@ -73,11 +86,12 @@ PENDING_COLS = [
     "w_ref", "h_ref", "fmt_ref", "caption_ref", "phash_ref",
 ]
 
-# fetch_log small-file compaction cadence: every K epochs the log's
-# per-epoch snapshots are rewritten into one (catalog.Table.compact). A
-# 10^3-epoch crawl carries ≤50 live snapshots instead of 10^3, while
-# short crawls (< 50 epochs, incl. the bench) never pay the rewrite;
-# measured cost at cadence 3 in BASELINE.md.
+# Small-file compaction cadence: every K epochs the per-epoch snapshots
+# of fetch_log and of the checkpoint counters are rewritten into one
+# each (catalog.Table.compact). A 10^3-epoch crawl carries ≤50 live
+# snapshots per table instead of 10^3, while short crawls (< 50 epochs,
+# incl. the bench) never pay the rewrite; measured cost at cadence 3 in
+# BASELINE.md.
 LOG_COMPACT_EVERY = 50
 
 # Discovered rows append to the frontier table in batches of K epochs
@@ -453,25 +467,13 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     always the exact join); it stays only because perfbench/workloads.py
     still passes it.
 
-    AQE is switched off for the duration of the loop: every join and
-    shuffle here is explicitly sized (broadcast hints, pinned fetch
-    partitioning, right-sized writes), so adaptive re-planning only adds
-    driver latency to each of the many small per-epoch actions —
-    measurable as inter-job gaps in the event log. Restored on exit so
-    the analytic query surface keeps AQE's skew/coalesce benefits.
+    The loop runs under the session's own settings and changes none of
+    them: AQE coalesces the generic shuffles (tail retry epochs of a few
+    dozen rows need no full-width window shuffle) and splits skewed
+    joins. The partitioning the crawl does choose itself stays explicit:
+    hot-host salting, the host-bucketed frontier, broadcast hints and
+    the fetch stage's partition count (``_fetch_commit``).
     """
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _run_crawl_inner(spark, cfg, workdir, resume)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-
-
-def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
-                     resume: bool) -> list[EpochStats]:
     cat = Catalog(workdir)
     frontier_t = cat.table("frontier")
     if frontier_t.is_empty():
@@ -491,6 +493,9 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
         # fetch_log append and the frontier append would otherwise lose
         # that epoch's discoveries (they are re-derivable from the log).
         rebuild_discovered_frontier(spark, cat, cfg)
+    # Persisted: hot_hosts_of (the first action) fills the cache that
+    # epoch 1's pending set reads again (measured: without it a resume
+    # re-entry costs about 1.1 s more on 4 cores).
     frontier = frontier_t.read(spark).filter(F.col("robots_ok")).persist()
 
     images_t = cat.table("images")
@@ -534,23 +539,12 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     pending = apply_seen_state(pending, seen_agg, cfg, n_seen)
 
     hot_hosts = scheduler.hot_hosts_of(frontier, cfg)
-    # Pending-size estimate drives per-epoch shuffle sizing: tail retry
-    # epochs run dozens of rows — 32-partition window shuffles there are
-    # pure task-launch overhead (16 scheduling waves on a 2-core run).
-    # AQE would coalesce these adaptively; with it off in the loop, the
-    # driver does the arithmetic itself from the stats it already has.
-    n_pending_est = frontier.count()  # cheap: frontier is persisted
-    max_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     stats: list[EpochStats] = []
     disc_buffer = DiscoveryBuffer()
     last_epoch = start_epoch
     for epoch in range(start_epoch, cfg.max_epochs + 1):
         last_epoch = epoch
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(2, min(n_pending_est // 20_000 + 1, max_shuffle))),
-        )
         st, pending = run_epoch_incremental(
             spark, cat, cfg, pending, politeness, epoch, hot_hosts,
             images_ref, disc_buffer,
@@ -559,14 +553,11 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
         if st.n_selected == 0:
             break
         disc_buffer.flush(cat, epoch)
-        # next pending = losers + retryable errors + discovered children
-        n_pending_est = max(
-            st.n_candidates - st.n_selected + st.n_err, 1
-        ) + st.n_discovered
-        # fetch_log small-file compaction: epoch-per-snapshot appends
-        # are rewritten into one snapshot every LOG_COMPACT_EVERY epochs
-        # — bounded manifest/file-count at 10^3+-epoch crawls, content
-        # provably unchanged (latest_epoch preserved for resume).
+        # Small-file compaction: the epoch-per-snapshot appends of
+        # fetch_log and of the per-host checkpoint counters are
+        # rewritten into one snapshot each every LOG_COMPACT_EVERY
+        # epochs — bounded manifest/file-count at 10^3+-epoch crawls,
+        # content provably unchanged (latest_epoch preserved for resume).
         if epoch % LOG_COMPACT_EVERY == 0:
             # pending's retry branch is a LAZY projection of this
             # epoch's fetch_log snapshot; compaction rewrites those
@@ -574,7 +565,8 @@ def _run_crawl_inner(spark: SparkSession, cfg: CrawlConfig, workdir: str,
             # compaction cadence — every other epoch pending stays lazy
             # (the next rank checkpoint is its materialization point).
             pending = pending.localCheckpoint()
-            cat.table("fetch_log").compact(spark)
+            for name in ("fetch_log", "checkpoint"):
+                cat.table(name).compact(spark)
     # Any discovery batch still buffered becomes durable here — after
     # this point the frontier table is complete (readers outside the
     # loop, resume without heal, final-state tests all rely on it).
