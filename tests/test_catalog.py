@@ -251,6 +251,93 @@ def test_read_merges_evolved_schema(spark, tmp_path):
     assert set(t.read(spark).columns) == {"id", "v", "lang"}
 
 
+def _jobs_in_group(spark, fn):
+    """Spark job ids launched while ``fn()`` runs under a fresh job
+    group (the listener bus drained first, so none is missed)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_lazy_reads_launch_no_spark_job(spark, tmp_path):
+    """Reads use the schema each snapshot recorded at write time, so a
+    lazy ``read``, ``read_snapshot`` and ``scan`` infer nothing from
+    parquet footers and launch no Spark job — specless and spec'd
+    snapshots alike."""
+    t = Catalog(str(tmp_path)).table("facts")
+    s1 = t.append(spark.createDataFrame([(1, "a")], "id long, v string"), epoch=1)
+    t.append(spark.createDataFrame([(2, "b")], "id long, v string"), epoch=2)
+    t.set_partition_spec([("bucket", 4, "id")])
+    t.append(spark.createDataFrame([(3, "c")], "id long, v string"), epoch=3)
+
+    jobs, (full, one, hit) = _jobs_in_group(spark, lambda: (
+        t.read(spark), t.read_snapshot(spark, s1), t.scan(spark, eq={"id": 3})))
+    assert jobs == []
+    assert all("schema" in s.meta for s in t.snapshots())
+    assert sorted(r["id"] for r in full.collect()) == [1, 2, 3]
+    assert full.columns == ["id", "v"]
+    assert [(r["id"], r["v"]) for r in one.collect()] == [(1, "a")]
+    assert [(r["id"], r["v"]) for r in hit.collect()] == [(3, "c")]
+
+
+def test_snapshot_without_recorded_schema_still_reads(spark, tmp_path):
+    """A manifest entry written before snapshots recorded their schema
+    still reads (footer inference), alone, merged with recorded ones,
+    and through ``read_snapshot``/``scan``."""
+    import json
+
+    t = Catalog(str(tmp_path)).table("evolving")
+    s1 = t.append(spark.createDataFrame([(1, "a")], "id long, v string"), epoch=1)
+    t.append(spark.createDataFrame(
+        [(2, "b", "en")], "id long, v string, lang string"), epoch=2)
+
+    def strip(ids):
+        with open(t._manifest) as f:
+            snaps = json.load(f)
+        for s in snaps:
+            if s["snapshot_id"] in ids:
+                s["meta"].pop("schema", None)
+        with open(t._manifest, "w") as f:
+            json.dump(snaps, f)
+
+    strip({s1})  # mixed: one legacy entry, one recorded
+    assert {r["id"]: r["lang"] for r in t.read(spark).collect()} == {1: None, 2: "en"}
+    strip({s.snapshot_id for s in t.snapshots()})  # all legacy
+    assert not any("schema" in s.meta for s in t.snapshots())
+    assert {r["id"]: r["lang"] for r in t.read(spark).collect()} == {1: None, 2: "en"}
+    assert [r["v"] for r in t.read_snapshot(spark, s1).collect()] == ["a"]
+    assert [r["id"] for r in t.scan(spark, eq={"v": "b"}).collect()] == [2]
+
+
+def test_read_merges_recorded_schemas_by_type(spark, tmp_path):
+    """Recorded schemas merge by type: nullability alone does not
+    conflict (a compaction records every field nullable, a fresh append
+    may not), while a column recorded with two types cannot be merged —
+    the read raises, as parquet ``mergeSchema`` does."""
+    from pyspark.sql import functions as F
+
+    t = Catalog(str(tmp_path)).table("arrays")
+    t.append(spark.range(2).withColumn("a", F.array("id")), epoch=1)
+    t.append(spark.range(1).withColumn(
+        "a", F.array(F.lit(None).cast("long"))), epoch=2)
+    assert sorted(str(r["a"]) for r in t.read(spark).collect()) == [
+        "[0]", "[1]", "[None]"]
+
+    t = Catalog(str(tmp_path)).table("clash")
+    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
+    t.append(spark.createDataFrame([("x",)], "id string"), epoch=2)
+    with pytest.raises(ValueError, match="'id'"):
+        t.read(spark)
+
+
 def test_merge_on_read_and_materialize(spark, tmp_path):
     """MOR contract: merge_append is a plain O(batch) append (snapshot
     count grows), read_resolved returns last-writer-wins per key, and

@@ -120,7 +120,9 @@ def test_incremental_epoch_plan_has_no_join(spark):
     """The steady-state epoch plan (politeness ranking over the carried
     pending set) must contain NO join of any kind — the zero-joins-per-
     epoch claim in pipeline.py, pinned. The only join-ish node allowed
-    is the broadcast of the tiny politeness dim."""
+    is the broadcast of the tiny politeness dim, and it appears once:
+    the rank computes phase 1 once. With hot hosts the epoch loop pins
+    phase 1, and the finish over the pinned rows holds no join."""
     from ycrawl_spark import scheduler, synth
     from ycrawl_spark.config import CrawlConfig
 
@@ -139,10 +141,22 @@ def test_incremental_epoch_plan_has_no_join(spark):
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # politeness attaches as a broadcast join — the only join allowed
-    # (appears twice: the losers/survivors union duplicates the subtree;
-    # AQE reuses the broadcast exchange at runtime)
-    assert 1 <= plan.count("BroadcastHashJoin") <= 2
+    # politeness attaches as a broadcast join — the only join allowed,
+    # under the one phase-1 window
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("Window [") == 1, plan
+
+    hot = sorted(
+        r["canonical_host"]
+        for r in pending.select("canonical_host").distinct().collect()
+    )[:1]
+    tagged = scheduler.rank_phase1(pending, pol, cfg, hot).localCheckpoint()
+    finish = scheduler.rank_finish(tagged, hot)
+    plan_hot = finish._sc._jvm.PythonSQLUtils.explainString(
+        finish._jdf.queryExecution(), "simple"
+    )
+    assert "Join" not in plan_hot, plan_hot
+    assert plan_hot.count("Window [") == 1, plan_hot
 
 
 def test_calendar_min_marker_window_not_join(spark):
@@ -569,13 +583,12 @@ def test_rank_unsalted_is_single_shuffle(spark):
     plan = ranked._sc._jvm.PythonSQLUtils.explainString(
         ranked._jdf.queryExecution(), "simple"
     )
-    # The losers/survivors union duplicates the phase-1 subtree in the
-    # textual plan (fresh expression ids each branch; ReuseExchange
-    # collapses them at runtime). Distinct shuffle SHAPES — exchange
-    # lines with expression/plan ids stripped — is the invariant that
-    # survives the printout: 1 here (phase 1 only; the constant salt 0
-    # is folded out of the partitioning), 2 with a hot host (phase 1
-    # keyed (host, _salt) + phase 2 keyed (host) over the hot filter).
+    # Distinct shuffle SHAPES — exchange lines with expression/plan ids
+    # stripped: 1 here (phase 1 only; the constant salt 0 is folded out
+    # of the partitioning), 2 with a hot host (phase 1 keyed
+    # (host, _salt) + phase 2 keyed (host) over the hot filter). The
+    # composed hot-host plan reads phase 1 twice, so its shuffle lines
+    # repeat; the shapes do not.
     import re
 
     def shuffle_shapes(p: str) -> set:

@@ -13,6 +13,12 @@ Every commit goes through two private primitives:
   ``data/<snapshot_id>`` under the table's current partition spec and
   records that spec on the snapshot. ``append_pdf`` alone writes
   through pyarrow, so a tiny driver-side frame launches no Spark job.
+
+The manifest carries each snapshot's schema (``meta['schema']``, the
+written schema, hidden partition columns included), as Iceberg's
+metadata does: every read passes it to ``spark.read.schema``, so a
+lazy read launches no footer-inference job. Only snapshots committed
+before schemas were recorded still infer theirs.
 - ``Table._swap`` is the only place the manifest changes. Under the
   manifest lock it re-reads the manifest and the refs, computes the
   main lineage and the ref-reachable set once, lets the caller's
@@ -44,6 +50,7 @@ from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -58,6 +65,33 @@ class Snapshot:
 def _union(parts: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
                   parts)
+
+
+def _nullable(j):
+    """A schema's JSON with every field, element and value nullable —
+    the schema Spark reads parquet files under, whatever the writer
+    declared."""
+    if isinstance(j, list):
+        return [_nullable(v) for v in j]
+    if not isinstance(j, dict):
+        return j
+    return {k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _nullable(v) for k, v in j.items()}
+
+
+def _merged_schema(snaps: list[Snapshot]) -> StructType:
+    """The union of the snapshots' recorded schemas: fields in manifest
+    order, the first occurrence of a name wins, and a name recorded with
+    two types raises, as parquet ``mergeSchema`` does."""
+    fields: dict[str, dict] = {}
+    for s in snaps:
+        for f in _nullable(s.meta["schema"])["fields"]:
+            first = fields.setdefault(f["name"], f)
+            if first["type"] != f["type"]:
+                raise ValueError(
+                    f"column {f['name']!r} is recorded as {first['type']!r} "
+                    f"and as {f['type']!r}; the snapshots cannot be merged")
+    return StructType.fromJson({"type": "struct", "fields": list(fields.values())})
 
 
 def _gc(snaps: list[Snapshot]) -> None:
@@ -322,12 +356,15 @@ class Table:
         under the table's CURRENT spec. The writer derives the hidden
         partition columns and partitionBy's them, and the spec is
         recorded in ``meta['spec']`` so reads interpret this snapshot's
-        own layout (partition evolution). Nothing is committed."""
+        own layout (partition evolution). The written schema, derived
+        columns included, is recorded in ``meta['schema']``, so reads
+        need no footer inference. Nothing is committed."""
         snap = self._fresh(epoch, meta)
         spec = self.partition_spec()
         derived = self._derived(spec)
         for name, expr in derived:
             df = df.withColumn(name, expr)
+        snap.meta["schema"] = df.schema.jsonValue()
         writer = df.write.mode("overwrite")
         if spec:
             snap.meta["spec"] = [list(t) for t in spec]
@@ -462,11 +499,13 @@ class Table:
         loop does not use it: its per-host counters stay distributed."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         snap = self._fresh(epoch, meta)
+        table = pa.Table.from_pandas(pdf, preserve_index=False)
+        snap.meta["schema"] = from_arrow_schema(table.schema).jsonValue()
         os.makedirs(snap.files[0], exist_ok=True)
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                       os.path.join(snap.files[0], "part-0.parquet"))
+        pq.write_table(table, os.path.join(snap.files[0], "part-0.parquet"))
         self._swap(lambda snaps, *_: snaps + [snap], snap)
         return snap.snapshot_id
 
@@ -618,10 +657,15 @@ class Table:
 
     def _read_one(self, spark: SparkSession, s: Snapshot,
                   eq: dict | None = None, ranges: dict | None = None) -> DataFrame:
-        """One snapshot's rows with its hidden partition columns dropped.
-        With ``eq`` given, ``eq``/``ranges`` first prune partitions
-        through the snapshot's own spec (``scan``)."""
-        df = spark.read.parquet(*s.files)
+        """One snapshot's rows with its hidden partition columns dropped,
+        read under its recorded schema (footer inference only for a
+        snapshot that records none). With ``eq`` given, ``eq``/``ranges``
+        first prune partitions through the snapshot's own spec
+        (``scan``)."""
+        schema = s.meta.get("schema")
+        reader = (spark.read.schema(StructType.fromJson(schema)) if schema
+                  else spark.read)
+        df = reader.parquet(*s.files)
         spec = [tuple(t) for t in s.meta.get("spec", [])]
         if spec:
             if eq is not None:
@@ -654,12 +698,15 @@ class Table:
              branch: str | None = None) -> DataFrame | None:
         """Union of all snapshot data up to ``as_of`` (time travel).
         Derived partition columns stay hidden. Specless snapshots are
-        read in ONE multi-path ``mergeSchema`` read, so a column added
-        in a later snapshot surfaces with nulls for pre-evolution rows
-        (Iceberg add-column semantics) — without it Spark takes one
-        file's schema and silently DROPS the new column. ``branch``
-        reads the staged lineage instead (main-up-to-fork + branch
-        commits) — the AUDIT read of write-audit-publish."""
+        read in ONE multi-path read under the merge of their recorded
+        schemas (``_merged_schema``), so a column added in a later
+        snapshot surfaces with nulls for pre-evolution rows (Iceberg
+        add-column semantics) and no footer is read to find it.
+        Specless snapshots that record no schema take a ``mergeSchema``
+        inference read of their own — without it Spark takes one file's
+        schema and silently DROPS the new column. ``branch`` reads the
+        staged lineage instead (main-up-to-fork + branch commits) — the
+        AUDIT read of write-audit-publish."""
         snaps = self._visible_snaps(branch)
         if as_of is not None:
             hits = [i for i, s in enumerate(snaps) if s.snapshot_id == as_of]
@@ -668,9 +715,14 @@ class Table:
                     f"snapshot {as_of!r} not in manifest of {self.name!r} "
                     "(never committed, rolled back, or expired)")
             snaps = snaps[: hits[0] + 1]
-        specless = [p for s in snaps if not s.meta.get("spec") for p in s.files]
-        parts = ([spark.read.option("mergeSchema", "true").parquet(*specless)]
-                 if specless else [])
+        specless = [s for s in snaps if not s.meta.get("spec")]
+        legacy = [p for s in specless if not s.meta.get("schema") for p in s.files]
+        recorded = [s for s in specless if s.meta.get("schema")]
+        parts = ([spark.read.option("mergeSchema", "true").parquet(*legacy)]
+                 if legacy else [])
+        if recorded:
+            parts.append(spark.read.schema(_merged_schema(recorded))
+                         .parquet(*[p for s in recorded for p in s.files]))
         parts += [self._read_one(spark, s) for s in snaps if s.meta.get("spec")]
         return _union(parts) if parts else None
 

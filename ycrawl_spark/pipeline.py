@@ -26,40 +26,41 @@ no seen-set join and builds no filter.
 
 The loop runs under the session's AQE, where every shuffle map stage
 and every broadcast is its own Spark job. A steady-state epoch without
-discovery is 13 jobs, none of them O(frontier) after epoch 1; the list
-is read off the event log of a traced resume-recrawl run (epochs 2–3):
-  1–3. broadcasts of the persisted politeness dim: the rank plan
-       (``scheduler.rank_per_host``) holds three copies of the
-       politeness join under the phase-1 window, one per branch of its
-       result union (cold survivors, hot re-ranked survivors, budget
-       losers), and AQE builds each copy's broadcast separately;
-  4–6. the phase-1 window's shuffle map stage, once per copy (two of
-       them write identical bytes: AQE does not reuse them);
-  7. the phase-2 (hot-host re-rank) shuffle map stage;
-  8. rank localCheckpoint: politeness windows materialized once; both
-     the selected set and the budget losers are cheap filters of it,
-     and its row count rides an ``Observation``;
-  9. the shuffle-order exchange's map stage;
-  10. fused fetch+parse+validate (Arrow stage) → single wide
-      ``fetch_log`` append. Epoch totals ride the same job via
-      ``Observation``; validation needs no join — expected metadata
-      rides the frontier (fetch.REF_COLS, joined from the images table
-      once at crawl start);
-  11. the read-back's parquet schema inference (a footer-read job) over
-      the just-written snapshot;
-  12–13. per-host lineage counters: partial aggregation of that
-      snapshot (a shuffle map stage) → distributed ``checkpoint``
-      append.
+discovery is 9 jobs with hot hosts salted (7 without), none of them
+O(frontier) after epoch 1; the list is read off the event log of a
+traced resume-recrawl run (seed 1, epochs 2–3):
+  1. broadcast of the persisted politeness dim, joined once under the
+     phase-1 window (``scheduler.rank_phase1``);
+  2. the phase-1 window's shuffle map stage;
+  3. phase-1 localCheckpoint (hot hosts only): both branches of the
+     finish (``scheduler.rank_finish``) read the pinned rows, so the
+     politeness join and the phase-1 window run once per epoch;
+  4. the phase-2 (hot-host re-rank) shuffle map stage (hot hosts only;
+     it moves hot-host survivors alone);
+  5. rank localCheckpoint: both the selected set and the budget losers
+     are cheap filters of it, and its row count rides an
+     ``Observation``;
+  6. the shuffle-order exchange's map stage;
+  7. fused fetch+parse+validate (Arrow stage) → single wide
+     ``fetch_log`` append. Epoch totals ride the same job via
+     ``Observation``; validation needs no join — expected metadata
+     rides the frontier (fetch.REF_COLS, joined from the images table
+     once at crawl start);
+  8–9. per-host lineage counters: partial aggregation of the
+      read-back snapshot (a shuffle map stage) → distributed
+      ``checkpoint`` append. The read-back takes the schema the
+      snapshot recorded, so it infers nothing from parquet footers.
 The next pending set (budget losers ∪ retryable errors, frontier
 columns echoed on ERR rows — fetch.ECHO_COLS — so the retry path is a
 projection of the epoch delta, not a join) stays lazy: the next rank
 checkpoint materializes it. Epoch 1 of a (re)entry adds the cache fill
 of the politeness dim and the broadcast builds of its one-time joins
-(18 jobs), and the last epoch, which selects nothing, runs jobs 1–6
-only: the traced run averages 12.5 jobs per epoch over 4 epochs, where
-the same epochs ran as 5.25 jobs each with AQE off, with the resume op
-time inside its run-to-run spread. With discovery on, the novel-rows
-checkpoint adds its own jobs (``_discover``).
+(12 jobs), and the last epoch, which selects nothing, runs jobs 1–2
+only: the traced run averages 8.0 jobs per epoch over 4 epochs.
+Outside the epochs, the entry state count rides its checkpoint and the
+ingest count rides its append, so neither is a job of its own. With
+discovery on, the novel-rows checkpoint adds its own jobs
+(``_discover``).
 """
 
 from __future__ import annotations
@@ -418,9 +419,13 @@ def run_epoch_incremental(spark: SparkSession, cat: Catalog, cfg: CrawlConfig,
     )
     rank_obs = Observation(f"rank_{epoch}")
     with _phase(epoch, "rank"):
-        ranked = scheduler.rank_per_host(
-            with_attempt, politeness, cfg, hot_hosts
-        ).observe(rank_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        tagged = scheduler.rank_phase1(with_attempt, politeness, cfg, hot_hosts)
+        if hot_hosts:
+            # Both branches of the hot-host finish read phase 1: pinned,
+            # its politeness join and window run once, not once per branch.
+            tagged = tagged.localCheckpoint()
+        ranked = scheduler.rank_finish(tagged, hot_hosts).observe(
+            rank_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
         n_cand = int(rank_obs.get["n"] or 0)
     if n_cand == 0:
         return EpochStats(epoch, 0, 0, 0, 0), pending
@@ -529,8 +534,10 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig, workdir: str,
     seen_agg = load_seen_agg(spark, cat)
     n_seen = 0
     if seen_agg is not None:
-        seen_agg = seen_agg.localCheckpoint()
-        n_seen = seen_agg.count()
+        seen_obs = Observation("seen_agg")
+        seen_agg = seen_agg.observe(
+            seen_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        n_seen = int(seen_obs.get["n"] or 0)
 
     # The URL-seen membership test at the frontier boundary: it runs
     # here exactly once per (re)entry, as the exact state join — fresh
@@ -599,12 +606,13 @@ def ingest_frontier(spark: SparkSession, workdir: str, urls: DataFrame,
     cat = Catalog(workdir)
     if epoch_added is None:
         epoch_added = cat.table("fetch_log").latest_epoch() or 0
-    urls = urls.withColumn("epoch_added", F.lit(int(epoch_added)))
-    n = urls.count()
+    obs = Observation("ingest")
+    urls = urls.withColumn("epoch_added", F.lit(int(epoch_added))).observe(
+        obs, F.count(F.lit(1)).alias("n"))
     cat.table("frontier").append(urls, epoch=epoch_added)
     if images is not None:
         cat.table("images").append(images, epoch=epoch_added)
-    return n
+    return int(obs.get["n"] or 0)
 
 
 def read_parsed(spark: SparkSession, workdir: str) -> DataFrame:

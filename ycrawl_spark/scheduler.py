@@ -17,6 +17,13 @@ per-salt top-B superset; phase 2 re-ranks the (now ≤ B·n_salt per
 host) survivors within plain host partitions. The selected set is
 identical to a single global window, but no task ever sorts more than
 B·n_salt rows of a hot host.
+
+Phase 1 is computed once per epoch. ``rank_phase1`` tags every row
+with its phase-1 rank; ``rank_finish`` turns that into ``host_rank``:
+one projection when no host is salted, and otherwise two branches over
+the same phase-1 rows (hot-host survivors re-ranked, every other row
+projected), which the epoch loop reads from a localCheckpoint so the
+politeness join and the phase-1 window do not run once per branch.
 """
 
 from __future__ import annotations
@@ -46,20 +53,17 @@ def hot_hosts_of(frontier: DataFrame, cfg: CrawlConfig) -> list[str]:
     ]
 
 
-def rank_per_host(candidates: DataFrame, politeness: DataFrame,
-                  cfg: CrawlConfig, hot_hosts: list[str]) -> DataFrame:
-    """Rank every candidate within its host's politeness budget WITHOUT
-    dropping the losers: returns all input rows plus ``host_rank``
-    (null for rows pruned in phase 1 — they can't be in the host's
-    top-B) and ``max_per_epoch``. ``host_rank <= max_per_epoch`` (null-
-    false) is the selection predicate; the complement is exactly the
-    rows that stay pending — which lets the epoch loop maintain the
-    live frontier incrementally instead of re-running a seen-set join
-    every epoch.
+def rank_phase1(candidates: DataFrame, politeness: DataFrame,
+                cfg: CrawlConfig, hot_hosts: list[str]) -> DataFrame:
+    """Phase 1 of the rank, over ALL candidate rows: the politeness
+    join, the salt, and ``_r1`` = row_number within (host, salt).
 
     ``politeness``: (canonical_host, max_per_epoch, ...) small dim →
     broadcast join. ``hot_hosts``: the salting list, computed once per
-    crawl by ``hot_hosts_of``.
+    crawl by ``hot_hosts_of``. The per-salt top-B (``_r1 <=
+    max_per_epoch``) is a superset of the true per-host top-B; rows
+    beyond it are certain losers. For every non-hot host ``_salt`` is
+    the constant 0, so ``_r1`` already IS the exact host rank.
     """
     withb = candidates.join(
         F.broadcast(politeness.select("canonical_host", "max_per_epoch")),
@@ -83,41 +87,55 @@ def rank_per_host(candidates: DataFrame, politeness: DataFrame,
             F.pmod(F.xxhash64(F.col("key"), F.lit("salt")), F.lit(cfg.n_salt)),
         ).otherwise(F.lit(0)),
     )
-
-    # Phase 1: local prune within (host, salt) — per-salt top-B is a
-    # superset of the true per-host top-B; rows beyond it are certain
-    # losers and bypass phase 2 entirely (no second shuffle for them).
     w1 = W.partitionBy("canonical_host", "_salt").orderBy(*_order())
-    tagged = salted.withColumn("_r1", F.row_number().over(w1))
-    losers = tagged.filter(F.col("_r1") > F.col("max_per_epoch")).drop(
-        "_r1", "_salt", "_hot"
-    ).withColumn("host_rank", F.lit(None).cast("int"))
-    survivors = tagged.filter(F.col("_r1") <= F.col("max_per_epoch"))
+    return salted.withColumn("_r1", F.row_number().over(w1))
 
-    # Phase 2: exact per-host re-rank, needed ONLY where salting split a
-    # host across partitions. For every non-hot host _salt is the
-    # constant 0, so the phase-1 window already ranked the whole host —
-    # _r1 IS the exact host rank, and re-windowing those rows would be a
-    # second full shuffle that recomputes what phase 1 proved (the
-    # dominant per-epoch fixed cost on a crawl with no hot hosts, which
-    # is the steady state: salting is the exception, not the rule).
+
+def rank_finish(tagged: DataFrame, hot_hosts: list[str]) -> DataFrame:
+    """Phase 2 of the rank over ``rank_phase1`` output: ``host_rank``
+    for every row (null for budget losers), phase-1 columns dropped.
+
+    Without hot hosts the finish is one projection of ``_r1`` — no
+    union, so the plan holds phase 1 once. With hot hosts, the exact
+    per-host re-rank is needed ONLY where salting split a host across
+    partitions: the hot-host survivors (≤ n_salt·B per hot host) take
+    a second ``row_number`` over plain host partitions, and every other
+    row keeps ``_r1`` (or null). ``tagged`` is read by both branches,
+    so the caller pins it first (``run_epoch_incremental``
+    localCheckpoints it) or phase 1 runs twice.
+    """
+    survivor = F.col("_r1") <= F.col("max_per_epoch")
+    hot_survivor = survivor & F.col("_hot").isNotNull()
+    phase1_cols = ("_r1", "_salt", "_hot")
+    rest = (tagged.filter(~hot_survivor) if hot_hosts else tagged).withColumn(
+        "host_rank", F.when(survivor, F.col("_r1"))).drop(*phase1_cols)
     if not hot_hosts:
-        # Nothing is salted — one shuffle total.
-        ranked = survivors.withColumn("host_rank", F.col("_r1")).drop(
-            "_r1", "_salt", "_hot")
-    else:
-        w2 = W.partitionBy("canonical_host").orderBy(*_order())
-        cold = survivors.filter(F.col("_hot").isNull()).withColumn(
-            "host_rank", F.col("_r1")).drop("_r1", "_salt", "_hot")
-        hot_ranked = (
-            survivors.filter(F.col("_hot").isNotNull())
-            .drop("_r1", "_salt", "_hot")
-            .withColumn("host_rank", F.row_number().over(w2))
-        )
-        # The phase-2 shuffle moves only hot-host survivors (≤ n_salt·B
-        # per hot host); cold hosts ride through shuffle-free.
-        ranked = cold.unionByName(hot_ranked)
-    return ranked.unionByName(losers)
+        return rest
+    w2 = W.partitionBy("canonical_host").orderBy(*_order())
+    hot_ranked = (
+        tagged.filter(hot_survivor)
+        .drop(*phase1_cols)
+        .withColumn("host_rank", F.row_number().over(w2))
+    )
+    return rest.unionByName(hot_ranked)
+
+
+def rank_per_host(candidates: DataFrame, politeness: DataFrame,
+                  cfg: CrawlConfig, hot_hosts: list[str]) -> DataFrame:
+    """Rank every candidate within its host's politeness budget WITHOUT
+    dropping the losers: returns all input rows plus ``host_rank``
+    (null for rows that can't be in the host's top-B) and
+    ``max_per_epoch``. ``host_rank <= max_per_epoch`` (null-false) is
+    the selection predicate; the complement is exactly the rows that
+    stay pending — which lets the epoch loop maintain the live frontier
+    incrementally instead of re-running a seen-set join every epoch.
+
+    ``rank_finish`` over ``rank_phase1``; with hot hosts the plan reads
+    phase 1 twice, which the epoch loop avoids by pinning phase 1
+    between the two steps.
+    """
+    return rank_finish(rank_phase1(candidates, politeness, cfg, hot_hosts),
+                       hot_hosts)
 
 
 def is_selected():
