@@ -57,6 +57,19 @@ def test_rollback_uncommits_snapshot(spark, tmp_path):
     assert len(gone) == 1  # exactly the rolled-back snapshot's dir
 
 
+def test_read_snapshot_unknown_id_raises_value_error(spark, tmp_path):
+    """An id not in the manifest (here: rolled back) fails the way
+    ``read(as_of=)`` does — a ValueError naming the table and the id."""
+    t = Catalog(str(tmp_path)).table("log")
+    t.append(spark.createDataFrame([(1,)], "id int"), epoch=1)
+    s2 = t.append(spark.createDataFrame([(2,)], "id int"), epoch=2)
+    t.rollback(s2)
+    with pytest.raises(ValueError, match=f"{s2}.*'log'"):
+        t.read_snapshot(spark, s2)
+    with pytest.raises(ValueError, match=f"{s2}.*'log'"):
+        t.read(spark, as_of=s2)
+
+
 def test_append_pdf_no_spark_job(spark, tmp_path):
     t = Catalog(str(tmp_path)).table("counters")
     t.append_pdf(pd.DataFrame({"host": ["h1", "h2"], "n": [3, 4]}), epoch=1)
@@ -575,82 +588,6 @@ def test_remove_orphan_files_sweeps_uncommitted_dirs(spark, tmp_path):
     assert [r["id"] for r in t.read(spark).collect()] == [1]
 
 
-def test_branch_staging_is_invisible_to_main(spark, tmp_path):
-    """Write-audit-publish: a staged branch append is readable on the
-    branch (fork data + staged rows) but invisible to main reads,
-    scans, and resume numbering until published."""
-    t = Catalog(str(tmp_path)).table("pairs")
-    t.append(spark.createDataFrame([(1, "a")], "id int, v string"), epoch=1)
-    fork = t.create_branch("audit")
-    assert fork == t.snapshots()[0].snapshot_id
-
-    t.write_branch("audit", spark.createDataFrame(
-        [(2, "b")], "id int, v string"), epoch=2)
-
-    assert {r["id"] for r in t.read(spark).collect()} == {1}
-    assert {r["id"] for r in t.scan(spark).collect()} == {1}
-    assert t.latest_epoch() == 1  # staged epoch must not shift resume
-    assert {r["id"] for r in t.read(spark, branch="audit").collect()} == {1, 2}
-
-
-def test_branch_publish_fast_forwards_main(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("pairs")
-    t.append(spark.createDataFrame([(1,)], "id int"), epoch=1)
-    t.create_branch("audit")
-    s2 = t.write_branch("audit", spark.createDataFrame([(2,)], "id int"),
-                        epoch=2)
-    s3 = t.write_branch("audit", spark.createDataFrame([(3,)], "id int"),
-                        epoch=3)
-
-    assert t.publish_branch("audit") == [s2, s3]
-    assert {r["id"] for r in t.read(spark).collect()} == {1, 2, 3}
-    assert t.latest_epoch() == 3
-    assert t.branches() == {}
-    # published snapshots time-travel like any main commit
-    assert {r["id"] for r in t.read(spark, as_of=s2).collect()} == {1, 2}
-
-
-def test_branch_publish_conflict_when_main_advanced(spark, tmp_path):
-    """Fast-forward requires main to still sit at the fork: a main
-    commit landed after the fork -> publish raises, branch stays
-    readable for re-staging, main is untouched."""
-    t = Catalog(str(tmp_path)).table("pairs")
-    t.append(spark.createDataFrame([(1,)], "id int"), epoch=1)
-    t.create_branch("audit")
-    t.write_branch("audit", spark.createDataFrame([(2,)], "id int"), epoch=2)
-    t.append(spark.createDataFrame([(9,)], "id int"), epoch=2)  # main moves
-
-    try:
-        t.publish_branch("audit")
-        raise AssertionError("publish past a moved main must conflict")
-    except ValueError:
-        pass
-    assert {r["id"] for r in t.read(spark).collect()} == {1, 9}
-    # branch read still shows fork + staged (not main's later commit)
-    assert {r["id"] for r in t.read(spark, branch="audit").collect()} == {1, 2}
-
-
-def test_branch_drop_discards_staged_data(spark, tmp_path):
-    import os
-
-    t = Catalog(str(tmp_path)).table("pairs")
-    t.append(spark.createDataFrame([(1,)], "id int"), epoch=1)
-    t.create_branch("audit")
-    sid = t.write_branch("audit", spark.createDataFrame([(2,)], "id int"))
-    staged_dirs = [p for s in t.snapshots()
-                   if s.snapshot_id == sid for p in s.files]
-
-    assert t.drop_branch("audit") == [sid]
-    assert {r["id"] for r in t.read(spark).collect()} == {1}
-    assert not any(os.path.exists(d) for d in staged_dirs)
-    assert t.branches() == {}
-    try:
-        t.read(spark, branch="audit")
-        raise AssertionError("dropped branch must be unreadable")
-    except ValueError:
-        pass
-
-
 def _race_into_lock(t, racer):
     """Run ``racer()`` once, just before ``t``'s next manifest-lock
     acquisition — between a commit path's data write and its swap."""
@@ -664,84 +601,8 @@ def _race_into_lock(t, racer):
     t._manifest_lock = lock_after_race
 
 
-def _ids(df) -> set:
-    return {r["id"] for r in df.collect()}
-
-
 def _on_disk(t) -> set:
     return set(glob.glob(os.path.join(t.path, "data", "*")))
-
-
-def _live(t) -> set:
-    return {p for s in t.snapshots() for p in s.files}
-
-
-def test_replace_and_merge_refuse_to_drop_fork_lineage(spark, tmp_path):
-    """replace and merge_upsert would supersede the fork snapshot of a
-    staged branch: replace raises naming the branch, merge_upsert
-    returns None, and the audit read keeps working."""
-    t = Catalog(str(tmp_path)).table("pairs")
-    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
-    t.create_branch("audit")
-    t.write_branch("audit", spark.createDataFrame([(2,)], "id long"), epoch=2)
-
-    with pytest.raises(ValueError, match="audit"):
-        t.replace(spark.createDataFrame([(9,)], "id long"), epoch=3)
-    assert t.merge_upsert(
-        spark, spark.createDataFrame([(1,)], "id long"), key="id") is None
-    assert _ids(t.read(spark, branch="audit")) == {1, 2}
-    assert _ids(t.read(spark)) == {1}
-    assert _on_disk(t) == _live(t)  # refused writes GC'd their dirs
-
-
-def test_merge_upsert_epoch_default_ignores_staged_branch(spark, tmp_path):
-    """The merge's default epoch comes from the main lineage: a staged
-    epoch-9 branch must not move main ``latest_epoch`` off 1, and the
-    staged snapshot survives the rewrite."""
-    t = Catalog(str(tmp_path)).table("corpus")
-    t.create_branch("audit")  # forked off the empty table
-    t.write_branch("audit", spark.createDataFrame([(9,)], "id long"), epoch=9)
-    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
-
-    assert t.merge_upsert(
-        spark, spark.createDataFrame([(2,)], "id long"), key="id") is not None
-    assert t.latest_epoch() == 1
-    assert _ids(t.read(spark)) == {1, 2}
-    assert _ids(t.read(spark, branch="audit")) == {9}
-
-
-def test_merge_upsert_cas_ignores_concurrent_branch_write(spark, tmp_path):
-    """The merge CAS compares main-lineage snapshots only: a branch
-    commit racing into the lock is not a conflict, and it survives."""
-    cat = Catalog(str(tmp_path))
-    t = cat.table("corpus")
-    t.create_branch("audit")
-    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
-
-    _race_into_lock(t, lambda: cat.table("corpus").write_branch(
-        "audit", spark.createDataFrame([(7,)], "id long"), epoch=2))
-    assert t.merge_upsert(
-        spark, spark.createDataFrame([(2,)], "id long"), key="id") is not None
-    assert _ids(t.read(spark)) == {1, 2}
-    assert _ids(t.read(spark, branch="audit")) == {7}
-
-
-def test_write_branch_rechecks_ref_inside_lock(spark, tmp_path):
-    """A branch dropped between write_branch's data write and its commit
-    must not leave an orphan snapshot behind — a later compact would
-    fold its unaudited rows into main."""
-    cat = Catalog(str(tmp_path))
-    t = cat.table("pairs")
-    t.append(spark.createDataFrame([(1,)], "id long"), epoch=1)
-    t.create_branch("audit")
-
-    _race_into_lock(t, lambda: cat.table("pairs").drop_branch("audit"))
-    with pytest.raises(ValueError, match="audit"):
-        t.write_branch("audit", spark.createDataFrame([(7,)], "id long"))
-    assert len(t.snapshots()) == 1
-    assert _on_disk(t) == _live(t)  # the staged dir was GC'd
-    assert t.compact(spark, min_snapshots=1) is not None
-    assert sorted(_ids(t.read(spark))) == [1]
 
 
 def test_truncate_commits_under_lock_and_gcs_data(spark, tmp_path):
@@ -756,66 +617,3 @@ def test_truncate_commits_under_lock_and_gcs_data(spark, tmp_path):
     assert fired == [True]
     assert t.read(spark) is None
     assert _on_disk(t) == set()
-
-
-def test_compact_folds_main_tail_and_carries_branches(spark, tmp_path):
-    """With a staged branch forked mid-lineage, compaction folds only
-    the main snapshots after the fork; the fork lineage and the staged
-    snapshot stay untouched, so both reads keep their rows."""
-    t = Catalog(str(tmp_path)).table("log")
-    for e in (1, 2):
-        t.append(spark.createDataFrame([(e,)], "id long"), epoch=e)
-    t.create_branch("audit")
-    t.write_branch("audit", spark.createDataFrame([(5,)], "id long"), epoch=5)
-    for e in (3, 4):
-        t.append(spark.createDataFrame([(e,)], "id long"), epoch=e)
-
-    assert t.compact(spark) is not None
-    assert [s.meta.get("compacted_from") for s in t.snapshots()] == [
-        None, None, None, 2]
-    assert t.latest_epoch() == 4
-    assert _ids(t.read(spark)) == {1, 2, 3, 4}
-    assert _ids(t.read(spark, branch="audit")) == {1, 2, 5}
-    assert _on_disk(t) == _live(t)
-
-
-_REWRITES = {
-    "replace": lambda t, spark, fork: t.replace(
-        spark.createDataFrame([(9,)], "id int"), epoch=9),
-    "merge_upsert": lambda t, spark, fork: t.merge_upsert(
-        spark, spark.createDataFrame([(9,)], "id int"), key="id"),
-    "compact": lambda t, spark, fork: t.compact(spark),
-    "materialize_merges": lambda t, spark, fork: t.materialize_merges(
-        spark, key="id"),
-    "rollback": lambda t, spark, fork: t.rollback(fork),
-    "expire_snapshots": lambda t, spark, fork: t.expire_snapshots(keep_last=1),
-}
-
-
-@pytest.mark.parametrize("rewrite", sorted(_REWRITES))
-def test_rewrite_keeps_staged_branch(spark, tmp_path, rewrite):
-    """Every rewrite keeps a staged branch whole: its fork lineage sits
-    at the main head, so each rewrite must refuse — a ValueError naming
-    the branch, or a no-op result — and the audit read, the publish and
-    post-publish maintenance all still work."""
-    t = Catalog(str(tmp_path)).table("log")
-    for e in range(1, 5):
-        t.append(spark.createDataFrame([(e,)], "id int"), epoch=e)
-    fork = t.create_branch("audit")
-    staged = t.write_branch("audit", spark.createDataFrame([(5,)], "id int"),
-                            epoch=5)
-    live_before = _live(t)
-
-    try:
-        assert _REWRITES[rewrite](t, spark, fork) in (None, [])
-    except ValueError as e:
-        assert "audit" in str(e)
-    assert _live(t) == live_before == _on_disk(t)
-    assert _ids(t.read(spark)) == {1, 2, 3, 4}
-    assert _ids(t.read(spark, branch="audit")) == {1, 2, 3, 4, 5}
-
-    assert t.publish_branch("audit") == [staged]
-    assert _ids(t.read(spark)) == {1, 2, 3, 4, 5}
-    assert len(t.expire_snapshots(keep_last=2)) == 3
-    assert _ids(t.read(spark)) == {4, 5}
-    assert t.latest_epoch() == 5

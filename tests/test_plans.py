@@ -194,37 +194,6 @@ def test_training_data_prep_single_pass_no_joins(spark):
     assert plan.count("documents.parquet") == 1
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed by the join key co-locate: the sort-merge
-    join plan reads bucket files directly — no Exchange on either side.
-    This is the layout the frontier⋈images and host-keyed joins use at
-    warehouse scale (north_rule: frontier bucketed by host hash)."""
-    from ycrawl_spark.catalog import write_bucketed
-
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    write_bucketed(o, "t_orders_bkt", "o_custkey", n_buckets=4)
-    write_bucketed(c, "t_customer_bkt", "c_custkey", n_buckets=4)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("t_orders_bkt").join(
-            spark.table("t_customer_bkt"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = j._sc._jvm.PythonSQLUtils.explainString(
-            j._jdf.queryExecution(), "formatted")
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_bkt")
-        spark.sql("DROP TABLE IF EXISTS t_customer_bkt")
-
-
 def test_pack_chunks_data_window_is_partition_local(spark):
     """The packing prefix sum must never window the data globally: the
     data-side Window partitions by the physical partition id; the only

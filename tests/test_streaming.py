@@ -29,8 +29,8 @@ def events_dir(tmp_path):
 def test_windowed_counts_match_batch(spark, events_dir, tmp_path):
     stream = streaming.stream_source(spark, events_dir, streaming.EVENTS_SCHEMA)
     agg = streaming.windowed_counts(stream, window="1 day", watermark="1 hour")
-    # append mode emits only watermark-closed windows; AvailableNow with
-    # complete-mode via host_throughput below covers the other shape.
+    # append mode emits only watermark-closed windows; the AvailableNow
+    # complete-mode drain is covered by test_incremental_files_complete_mode.
     name = streaming.run_available_now(agg, str(tmp_path / "ckpt"), out_mode="append")
     got = spark.table(name)
 
@@ -186,7 +186,7 @@ def test_stream_merge_into_catalog_upserts_across_drains(spark, tmp_path):
     assert len(t.snapshots()) == 1  # MERGE keeps the table one-snapshot
 
 
-def test_incremental_files_and_host_throughput(spark, events_dir, tmp_path):
+def test_incremental_files_complete_mode(spark, events_dir, tmp_path):
     stream = streaming.stream_source(spark, events_dir, streaming.EVENTS_SCHEMA)
     by_type = (
         stream.groupBy("event_type").agg(F.count("*").alias("n"))

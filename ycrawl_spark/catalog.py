@@ -2,10 +2,11 @@
 
 No Iceberg runtime jar ships in this container, so this thin facade
 provides the same *semantics* over partitioned parquet + a JSON
-manifest: atomic commits, snapshot ids, time travel by snapshot,
-partition layout and write-audit-publish branches. On a real cluster
-the same call sites swap to ``df.writeTo(name).append()`` — the
-pipeline only uses this narrow API.
+manifest: atomic commits, snapshot ids, time travel by snapshot and
+partition layout. On a real cluster the same call sites swap to
+``df.writeTo(name).append()`` — the pipeline only uses this narrow API.
+A table is one snapshot lineage: every read sees every committed
+snapshot, in manifest order.
 
 Every commit goes through two private primitives:
 
@@ -13,24 +14,17 @@ Every commit goes through two private primitives:
   ``data/<snapshot_id>`` under the table's current partition spec and
   records that spec on the snapshot. ``append_pdf`` alone writes
   through pyarrow, so a tiny driver-side frame launches no Spark job.
+- ``Table._swap`` is the only place the manifest changes. Under the
+  manifest lock it re-reads the manifest, lets the caller's rewrite
+  build the new snapshot list (or abort on a CAS conflict: ``None``
+  from ``compact``/``merge_upsert``), commits, and then deletes the
+  data dirs of exactly the snapshots it dropped.
 
 The manifest carries each snapshot's schema (``meta['schema']``, the
 written schema, hidden partition columns included), as Iceberg's
 metadata does: every read passes it to ``spark.read.schema``, so a
 lazy read launches no footer-inference job. Only snapshots committed
 before schemas were recorded still infer theirs.
-- ``Table._swap`` is the only place the manifest changes. Under the
-  manifest lock it re-reads the manifest and the refs, computes the
-  main lineage and the ref-reachable set once, lets the caller's
-  rewrite build the new snapshot list (CAS bases and default epochs
-  come from the main lineage only), commits, and then deletes the data
-  dirs of exactly the snapshots it dropped.
-
-The ref-protection rule lives in ``_swap`` alone: a snapshot is
-ref-reachable when a live branch staged it or when it lies on the main
-lineage at or below a live branch's fork point, and no commit may drop
-one. A commit that would is refused (``ValueError`` naming the branch,
-or ``None`` from the CAS-style rewrites ``compact``/``merge_upsert``).
 
 Reference analog for the manifest: the crawl's completion checkpoint
 ``0_meta_on_completion.json`` (reference Frontend/functions.py:17-35),
@@ -144,116 +138,21 @@ class Table:
             finally:
                 fcntl.flock(f, fcntl.LOCK_UN)
 
-    # -- branch refs (Iceberg write-audit-publish). A branch is a named
-    # ref with a FORK POINT (the main-head snapshot id at creation).
-    # Branch snapshots live in the same manifest tagged
-    # ``meta["branch"]`` and are invisible to main reads until
-    # ``publish_branch`` fast-forwards them; branch reads see the main
-    # lineage up to the fork plus the branch's own commits.
-
-    @property
-    def _refs_file(self) -> str:
-        return os.path.join(self.path, "refs.json")
-
-    def branches(self) -> dict:
-        if not os.path.exists(self._refs_file):
-            return {}
-        with open(self._refs_file) as f:
-            return json.load(f)
-
-    def _commit_refs(self, refs: dict) -> None:
-        tmp = self._refs_file + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(refs, f)
-        os.replace(tmp, self._refs_file)
-
-    def _ref(self, refs: dict, name: str) -> dict:
-        if name not in refs:
-            raise ValueError(f"no branch {name!r} on table {self.name!r}")
-        return refs[name]
-
-    @staticmethod
-    def _main_snaps(snaps: list[Snapshot]) -> list[Snapshot]:
-        return [s for s in snaps if not s.meta.get("branch")]
-
-    @staticmethod
-    def _staged(snaps: list[Snapshot], branch: str | None = None) -> list[Snapshot]:
-        """Branch-tagged snapshots (of ``branch``, or of any branch)."""
-        return [s for s in snaps if s.meta.get("branch")
-                and branch in (None, s.meta["branch"])]
-
-    @staticmethod
-    def _fork_lineage(main: list[Snapshot],
-                      fork_id: str | None) -> list[Snapshot] | None:
-        """Main lineage up to and including ``fork_id``: [] for a branch
-        forked off an empty table, None once the fork is gone."""
-        if fork_id is None:
-            return []
-        ids = [s.snapshot_id for s in main]
-        return main[: ids.index(fork_id) + 1] if fork_id in ids else None
-
-    def _reach(self, snaps: list[Snapshot], main: list[Snapshot],
-               refs: dict) -> dict[str, list[str]]:
-        """Ref-reachable snapshot id -> the live branches reaching it:
-        each branch's staged snapshots plus main up to its fork."""
-        reach: dict[str, list[str]] = {}
-        for name, ref in refs.items():
-            lineage = self._fork_lineage(main, ref["fork_id"]) or []
-            for s in lineage + self._staged(snaps, name):
-                reach.setdefault(s.snapshot_id, []).append(name)
-        return reach
-
-    def _visible_snaps(self, branch: str | None) -> list[Snapshot]:
-        """Manifest-ordered snapshots a read on ``branch`` sees: main
-        lineage only (branch=None), or main-up-to-fork plus the
-        branch's staged commits."""
-        snaps = self.snapshots()
-        if branch is None:
-            return self._main_snaps(snaps)
-        fork_id = self._ref(self.branches(), branch)["fork_id"]
-        lineage = self._fork_lineage(self._main_snaps(snaps), fork_id)
-        if lineage is None:
-            raise ValueError(
-                f"fork snapshot {fork_id!r} of branch {branch!r} no "
-                "longer in manifest (rolled back or expired)")
-        return lineage + self._staged(snaps, branch)
-
-    def _swap(self, rewrite, fresh: Snapshot | None = None,
-              strict: bool = True) -> list[Snapshot] | None:
+    def _swap(self, rewrite,
+              fresh: Snapshot | None = None) -> list[Snapshot] | None:
         """The one manifest change. Under the lock: re-read the manifest
-        and the refs, compute the main lineage and the ref-reachable set
-        once, and ask ``rewrite(snaps, main, reach, refs)`` for the new
-        snapshot list. The rewrite may pop refs, and returns None to
+        and ask ``rewrite(snaps)`` for the new snapshot list, or None to
         abort (a CAS conflict). ``fresh`` is the snapshot this commit
         wrote; its dir is deleted whenever the commit does not land.
-
-        Refused: staging ``fresh`` onto a branch that no longer exists,
-        and dropping a snapshot a remaining ref reaches — ValueError
-        naming the branch, or None when ``strict`` is off. Otherwise
-        commit (manifest, then refs) and delete the data dirs of the
-        dropped snapshots AFTER the commit, so a reader sees the old
-        manifest or the new one, never missing files. Returns the
-        dropped snapshots, or None when aborted."""
+        Otherwise commit and delete the data dirs of the dropped
+        snapshots AFTER the commit, so a reader sees the old manifest or
+        the new one, never missing files. Returns the dropped snapshots,
+        or None when aborted."""
         doomed = [fresh] if fresh is not None else []
         with self._manifest_lock():
-            snaps, refs = self.snapshots(), self.branches()
-            refs_before = dict(refs)
-            main = self._main_snaps(snaps)
-            reach = self._reach(snaps, main, refs)
+            snaps = self.snapshots()
             try:
-                if fresh is not None and fresh.meta.get("branch"):
-                    self._ref(refs, fresh.meta["branch"])
-                new = rewrite(snaps, main, reach, refs)
-                kept = {s.snapshot_id for s in new or []}
-                held = [(sid, b) for sid, names in reach.items()
-                        if sid not in kept for b in names if b in refs]
-                if new is not None and held:
-                    if strict:
-                        raise ValueError(
-                            f"snapshot {held[0][0]!r} of table {self.name!r} "
-                            f"is reachable from branch {held[0][1]!r}; "
-                            "publish or drop the branch first")
-                    new = None
+                new = rewrite(snaps)
             except BaseException:
                 _gc(doomed)
                 raise
@@ -261,86 +160,10 @@ class Table:
                 _gc(doomed)
                 return None
             self._commit(new)
-            if refs != refs_before:
-                self._commit_refs(refs)
+        kept = {s.snapshot_id for s in new}
         dropped = [s for s in snaps if s.snapshot_id not in kept]
         _gc(dropped)
         return dropped
-
-    def create_branch(self, name: str) -> str | None:
-        """Open a staging branch forked at the current main head
-        (Iceberg ``createBranch``). Returns the fork snapshot id
-        (None on an empty table)."""
-        with self._manifest_lock():
-            refs = self.branches()
-            if name in refs:
-                raise ValueError(f"branch {name!r} already exists")
-            main = self._main_snaps(self.snapshots())
-            fork_id = main[-1].snapshot_id if main else None
-            refs[name] = {"fork_id": fork_id}
-            self._commit_refs(refs)
-        return fork_id
-
-    def write_branch(self, name: str, df: DataFrame,
-                     epoch: int | None = None,
-                     meta: dict | None = None) -> str:
-        """Stage an append on ``name`` — the WRITE of write-audit-
-        publish. The snapshot commits atomically like any append but is
-        invisible to main readers (and to ``latest_epoch``/``scan``/
-        merge-on-read resolution) until published, so a bad batch never
-        taints the serving table: audit it with ``read(branch=...)``,
-        then ``publish_branch`` or ``drop_branch``. The ref is checked
-        here and again inside the commit lock, so a branch dropped
-        mid-write raises instead of leaving an orphan snapshot."""
-        self._ref(self.branches(), name)
-        return self.append(df, epoch=epoch,
-                           meta=dict(meta or {}, branch=name))
-
-    def publish_branch(self, name: str) -> list[str]:
-        """Fast-forward main to the branch head — the PUBLISH step.
-        Succeeds only if main is still the branch's fork ancestor (no
-        main commit landed after the fork); otherwise raises and leaves
-        the branch intact for re-staging, exactly Iceberg's
-        ``fast_forward`` conflict contract. On success the staged
-        snapshots join the main lineage in commit order (their epochs
-        now advance ``latest_epoch``) and the ref is dropped. Returns
-        the published snapshot ids."""
-        published: list[str] = []
-
-        def rewrite(snaps, main, _reach, refs):
-            fork_id = self._ref(refs, name)["fork_id"]
-            head = main[-1].snapshot_id if main else None
-            if head != fork_id:
-                raise ValueError(
-                    f"cannot fast-forward branch {name!r}: main advanced "
-                    f"past fork {fork_id!r} (head {head!r}); re-stage "
-                    "against the new head")
-            refs.pop(name)
-            out = []
-            for s in snaps:
-                if s.meta.get("branch") == name:
-                    meta = {k: v for k, v in s.meta.items() if k != "branch"}
-                    s = Snapshot(s.snapshot_id, s.sequence, s.epoch, s.files,
-                                 dict(meta, published_from=name))
-                    published.append(s.snapshot_id)
-                out.append(s)
-            return out
-
-        self._swap(rewrite)
-        return published
-
-    def drop_branch(self, name: str) -> list[str]:
-        """Abort a staged branch — the reject path of the audit gate.
-        Removes the ref and the branch's snapshots from the manifest
-        and deletes their data dirs; main lineage is untouched. Returns
-        the dropped snapshot ids."""
-
-        def rewrite(snaps, _main, _reach, refs):
-            self._ref(refs, name)
-            refs.pop(name)
-            return [s for s in snaps if s.meta.get("branch") != name]
-
-        return [s.snapshot_id for s in self._swap(rewrite)]
 
     # -- writes. Each one is ``_write`` (or the pyarrow write of
     # ``append_pdf``) followed by one ``_swap``.
@@ -376,20 +199,17 @@ class Table:
                meta: dict | None = None) -> str:
         """Write df as a new snapshot; commit = atomic manifest swap."""
         snap = self._write(df, epoch, meta)
-        self._swap(lambda snaps, *_: snaps + [snap], snap)
+        self._swap(lambda snaps: snaps + [snap], snap)
         return snap.snapshot_id
 
     def replace(self, df: DataFrame, epoch: int | None = None,
                 meta: dict | None = None) -> str:
-        """Write df as the ONLY main-lineage snapshot (Iceberg
-        ``createOrReplace`` semantics) and garbage-collect the data of
-        the superseded snapshots after the commit. Used for tables
-        rewritten whole (e.g. by ``materialize_merges``). Staged
-        branch snapshots are carried through; a live branch's fork
-        lineage cannot be superseded, so replace raises ValueError
-        while one is staged on a non-empty fork."""
+        """Write df as the ONLY snapshot (Iceberg ``createOrReplace``
+        semantics) and garbage-collect the data of the superseded
+        snapshots after the commit. Used for tables rewritten whole
+        (e.g. by ``materialize_merges``)."""
         snap = self._write(df, epoch, meta)
-        self._swap(lambda snaps, *_: [snap] + self._staged(snaps), snap)
+        self._swap(lambda snaps: [snap], snap)
         return snap.snapshot_id
 
     def merge_upsert(self, spark: SparkSession, source: DataFrame,
@@ -405,16 +225,14 @@ class Table:
 
         Shape: one left_anti join of the target against the source's
         key set (broadcast when small) keeps the untouched mass, the
-        union with the source is the new main lineage, laid out under
+        union with the source is the new table state, laid out under
         the current partition spec. The commit is CAS-guarded: the
-        merge was computed against the base main lineage, so ANY
-        concurrent main commit (append/replace/compact/merge/publish)
-        invalidates it — abort, return None, caller retries against the
-        new manifest (Iceberg's serializable MERGE conflict behavior).
-        Staged branches are carried through; a merge that would
-        supersede a live fork returns None as well."""
-        main = self._main_snaps(self.snapshots())
-        base = [s.snapshot_id for s in main]
+        merge was computed against the base snapshots, so ANY
+        concurrent commit (append/replace/compact/merge) invalidates it
+        — abort, return None, caller retries against the new manifest
+        (Iceberg's serializable MERGE conflict behavior)."""
+        snaps = self.snapshots()
+        base = [s.snapshot_id for s in snaps]
         keys = [key] if isinstance(key, str) else list(key)
         target = self.read(spark)
         if target is None or delete_missing:
@@ -423,15 +241,13 @@ class Table:
             kept = target.join(
                 source.select(*keys).distinct(), keys, "left_anti")
             merged = kept.unionByName(source)
-        snap = self._write(merged, _max_epoch(main) if epoch is None else epoch,
-                           {"merge_keys": keys, "merge_base": len(main)})
+        snap = self._write(merged, _max_epoch(snaps) if epoch is None else epoch,
+                           {"merge_keys": keys, "merge_base": len(snaps)})
 
-        def rewrite(snaps, cur_main, *_):
-            if [s.snapshot_id for s in cur_main] != base:
-                return None
-            return [snap] + self._staged(snaps)
+        def rewrite(cur):
+            return [snap] if [s.snapshot_id for s in cur] == base else None
 
-        if self._swap(rewrite, snap, strict=False) is None:
+        if self._swap(rewrite, snap) is None:
             return None
         return snap.snapshot_id
 
@@ -459,7 +275,7 @@ class Table:
         ``key`` defaults to the most recent snapshot's ``merge_key``
         tag. One window shuffle over base ∪ deltas — the read-side
         cost MOR trades for its O(batch) writes."""
-        snaps = self._visible_snaps(None)
+        snaps = self.snapshots()
         if not snaps:
             return None
         if key is None:
@@ -481,9 +297,8 @@ class Table:
     def materialize_merges(self, spark: SparkSession,
                            key: str | list | None = None) -> str | None:
         """Fold accumulated MOR deltas into one resolved snapshot
-        (replace = the MOR analog of compact): read_resolved → replace,
-        so it refuses a live fork exactly like ``replace``. Returns the
-        new snapshot id, or None if the table is empty."""
+        (replace = the MOR analog of compact): read_resolved → replace.
+        Returns the new snapshot id, or None if the table is empty."""
         resolved = self.read_resolved(spark, key)
         if resolved is None:
             return None
@@ -506,7 +321,7 @@ class Table:
         snap.meta["schema"] = from_arrow_schema(table.schema).jsonValue()
         os.makedirs(snap.files[0], exist_ok=True)
         pq.write_table(table, os.path.join(snap.files[0], "part-0.parquet"))
-        self._swap(lambda snaps, *_: snaps + [snap], snap)
+        self._swap(lambda snaps: snaps + [snap], snap)
         return snap.snapshot_id
 
     def rollback(self, snapshot_id: str) -> None:
@@ -514,13 +329,12 @@ class Table:
         data files (Iceberg expire-snapshot analog). The epoch loop uses
         this to un-commit a zero-row append: leaving it would advance
         ``latest_epoch`` (shifting resume numbering) and add a part-
-        file-less dir to every later multi-path read. Raises ValueError
-        for a snapshot a live branch reaches."""
-        self._swap(lambda snaps, *_: [s for s in snaps
-                                      if s.snapshot_id != snapshot_id])
+        file-less dir to every later multi-path read."""
+        self._swap(lambda snaps: [s for s in snaps
+                                  if s.snapshot_id != snapshot_id])
 
     def compact(self, spark: SparkSession, min_snapshots: int = 2) -> str | None:
-        """Rewrite the main lineage into ONE snapshot (Iceberg
+        """Rewrite the table into ONE snapshot (Iceberg
         ``rewrite_data_files`` + ``expire_snapshots`` analog).
 
         A long crawl appends a snapshot per epoch; after 10^3 epochs a
@@ -534,14 +348,10 @@ class Table:
         travel before the compaction point is intentionally expired,
         exactly like ``expire_snapshots``.
 
-        Only main-lineage snapshots no live ref reaches are folded (the
-        main tail after the newest live fork); staged branch snapshots
-        and fork lineages are carried through untouched (Iceberg:
-        rewrite respects ref-reachable snapshots). The CAS guard aborts
-        (None) when a folded snapshot vanished or became ref-reachable
-        before the commit — the rewrite would otherwise RESURRECT or
-        double rows; snapshots APPENDED meanwhile are carried forward
-        (the Iceberg rewrite-retry analog).
+        The CAS guard aborts (None) when a folded snapshot vanished
+        before the commit — the rewrite would otherwise RESURRECT rows;
+        snapshots APPENDED meanwhile are carried forward (the Iceberg
+        rewrite-retry analog).
 
         Hidden-partition interplay: each base snapshot's DERIVED
         partition columns are dropped before the rewrite (they are
@@ -553,12 +363,9 @@ class Table:
         semantics are unchanged.
 
         Returns the new snapshot id, or None if there was nothing to
-        compact (fewer than ``min_snapshots`` foldable snapshots).
+        compact (fewer than ``min_snapshots`` snapshots).
         """
-        snaps = self.snapshots()
-        main = self._main_snaps(snaps)
-        reach = self._reach(snaps, main, self.branches())
-        fold = [s for s in main if s.snapshot_id not in reach]
+        fold = self.snapshots()
         if len(fold) < min_snapshots:
             return None
         data = _union([self._read_one(spark, s) for s in fold])
@@ -566,14 +373,14 @@ class Table:
                            {"compacted_from": len(fold)})
         first, fold_ids = fold[0].snapshot_id, {s.snapshot_id for s in fold}
 
-        def rewrite(cur, *_):
+        def rewrite(cur):
             if not fold_ids <= {s.snapshot_id for s in cur}:
                 return None
             # the compacted snapshot takes the first folded one's place
             return [snap if s.snapshot_id == first else s for s in cur
                     if s.snapshot_id == first or s.snapshot_id not in fold_ids]
 
-        if self._swap(rewrite, snap, strict=False) is None:
+        if self._swap(rewrite, snap) is None:
             return None
         return snap.snapshot_id
 
@@ -684,7 +491,7 @@ class Table:
         unaided, which is Iceberg's evolution contract."""
         eq, ranges = eq or {}, ranges or {}
         parts = [self._read_one(spark, s, eq, ranges)
-                 for s in self._visible_snaps(None)]
+                 for s in self.snapshots()]
         if not parts:
             return None
         out = _union(parts)
@@ -694,8 +501,8 @@ class Table:
             out = out.filter(F.col(c).between(lo, hi))
         return out
 
-    def read(self, spark: SparkSession, as_of: str | None = None,
-             branch: str | None = None) -> DataFrame | None:
+    def read(self, spark: SparkSession,
+             as_of: str | None = None) -> DataFrame | None:
         """Union of all snapshot data up to ``as_of`` (time travel).
         Derived partition columns stay hidden. Specless snapshots are
         read in ONE multi-path read under the merge of their recorded
@@ -704,10 +511,8 @@ class Table:
         add-column semantics) and no footer is read to find it.
         Specless snapshots that record no schema take a ``mergeSchema``
         inference read of their own — without it Spark takes one file's
-        schema and silently DROPS the new column. ``branch`` reads the
-        staged lineage instead (main-up-to-fork + branch commits) — the
-        AUDIT read of write-audit-publish."""
-        snaps = self._visible_snaps(branch)
+        schema and silently DROPS the new column."""
+        snaps = self.snapshots()
         if as_of is not None:
             hits = [i for i, s in enumerate(snaps) if s.snapshot_id == as_of]
             if not hits:
@@ -731,22 +536,25 @@ class Table:
         re-reads its own just-written delta this way (cheap columnar
         scan) instead of keeping the wide Python-stage output pinned in
         the block manager."""
-        snap = next(s for s in self.snapshots() if s.snapshot_id == snapshot_id)
+        snap = next((s for s in self.snapshots()
+                     if s.snapshot_id == snapshot_id), None)
+        if snap is None:
+            raise ValueError(
+                f"snapshot {snapshot_id!r} not in manifest of {self.name!r} "
+                "(never committed, rolled back, or expired)")
         return self._read_one(spark, snap)
 
     def expire_snapshots(self, *, keep_last: int | None = None,
                          older_than_epoch: int | None = None) -> list[str]:
         """Retention roll-off (Iceberg ``expire_snapshots`` analog; the
         reference keeps a ~3-month live table and rolls older crawls
-        into history, reference README.md:108-115): drop main-lineage
+        into history, reference README.md:108-115): drop
         snapshots past the retention bound from the manifest and delete
         their data dirs. A snapshot expires when it is BOTH beyond the
         ``keep_last`` newest (by commit order) AND, if given, has
         ``epoch < older_than_epoch`` — the conjunction mirrors
         Iceberg's retain-last + older-than pair, so neither knob alone
-        can empty a table. Staged snapshots and the main lineage up to
-        every live fork never expire (Iceberg: ref-reachable snapshots
-        are retained).
+        can empty a table.
 
         Resume-safety invariants (pinned in tests/test_catalog.py):
         the newest snapshot is never expired regardless of knobs, so
@@ -761,11 +569,11 @@ class Table:
         snapshots, expiration retires dead ones. Returns expired ids.
         """
 
-        def rewrite(snaps, main, reach, _refs):
-            keep_n = len(main) if keep_last is None else max(1, keep_last)
+        def rewrite(snaps):
+            keep_n = len(snaps) if keep_last is None else max(1, keep_last)
             expired = {
-                s.snapshot_id for i, s in enumerate(main)
-                if s.snapshot_id not in reach and len(main) - i > keep_n
+                s.snapshot_id for i, s in enumerate(snaps)
+                if len(snaps) - i > keep_n
                 and (older_than_epoch is None or s.epoch is None
                      or s.epoch < older_than_epoch)}
             if not expired:
@@ -781,10 +589,8 @@ class Table:
         pyarrow write) lays data down BEFORE ``_swap`` takes the commit
         lock, so a writer that dies mid-flight leaves a fully-written
         dir with no manifest entry. ``_swap`` deletes the dir of a
-        commit it aborts or refuses, and the dirs of the snapshots a
-        commit drops, but a crash can interrupt either cleanup. Dirs of
-        ref-reachable snapshots are never orphans: ``_swap`` never drops
-        those snapshots from the manifest.
+        commit it aborts, and the dirs of the snapshots a commit drops,
+        but a crash can interrupt either cleanup.
 
         The in-flight-writer race is handled the same way Iceberg
         handles it: only dirs older than ``min_age_seconds`` (mtime)
@@ -811,42 +617,19 @@ class Table:
         return doomed
 
     def latest_epoch(self) -> int | None:
-        """Highest committed epoch on the MAIN lineage — staged branch
-        epochs must not perturb crawl resume numbering until published."""
-        return _max_epoch(self._main_snaps(self.snapshots()))
+        """Highest committed epoch — crawl resume numbering starts
+        after it."""
+        return _max_epoch(self.snapshots())
 
     def is_empty(self) -> bool:
-        """True when ``read()`` would return None (no main-lineage
-        snapshot), answered from the manifest alone: no DataFrame, so
+        """True when ``read()`` would return None (no snapshot),
+        answered from the manifest alone: no DataFrame, so
         no parquet schema-inference job."""
-        return not self._main_snaps(self.snapshots())
+        return not self.snapshots()
 
     def truncate(self) -> None:
-        """Drop every main-lineage snapshot and delete its data (staged
-        branches are carried through; a live fork refuses it like
-        ``replace``)."""
-        self._swap(lambda snaps, *_: self._staged(snaps))
-
-
-def write_bucketed(df: DataFrame, table: str, key: str,
-                   n_buckets: int = 8, sort_by: str | None = None) -> None:
-    """Persist ``df`` hash-bucketed (and sorted) by ``key`` — Spark's
-    co-located join layout. Two tables bucketed by the same key with
-    the same bucket count equi-join with ZERO shuffle: each task reads
-    matching bucket files from both sides (the plan audit in
-    tests/test_plans.py pins the absence of Exchange nodes).
-
-    This is the 100 TB answer for the frontier⋈images validation join
-    and the repeated host-keyed joins: bucket both tables by
-    canonicalized-host/image-id hash at write time and every epoch's
-    join is co-located (north_rule: 'frontier lives in Iceberg tables
-    bucketed by canonicalized-host hash'). Requires saveAsTable —
-    bucket metadata lives in the session catalog, which is exactly how
-    Spark models it on a real cluster (Iceberg bucket-partition
-    transforms are the storage-side equivalent)."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    writer = writer.sortBy(sort_by or key)
-    writer.saveAsTable(table)
+        """Drop every snapshot and delete its data."""
+        self._swap(lambda snaps: [])
 
 
 class Catalog:

@@ -4879,8 +4879,8 @@ def link_katz_priority(spark, sf_dir):
     """Link-graph frontier prioritization — the crawl-ordering signal a
     frontier scheduler feeds its priority column (north_rule: "priority
     queue ... ordered by priority, depth, discovery-time"; reference
-    orders its frontier by static config only, gen.py:21-34 — link
-    authority is the scale-path upgrade). Katz-style truncated path
+    orders its frontier by static config only, Coordinator/main.py:34-61
+    — link authority is the scale-path upgrade). Katz-style truncated path
     count: w0 = 1, w_{k+1}(h) = 1 + Σ_{(s→h)∈E} w_k(s), i.e. the
     number of in-link paths of length ≤ k (attenuation 1) — PURE
     INTEGER power iteration, so unlike float PageRank the result is
@@ -5321,9 +5321,9 @@ def pagerank_host_priority(spark, sf_dir):
     Per round: one edges⋈outdeg⋈ranks equi-join chain + one
     groupBy(dst) partial-agg sum + one left join back to the node set;
     lineage localCheckpoint-cut per round — O(k) shuffles, no
-    driver-side graph state. Reference parity: gen.py's static
-    config-order frontier, upgraded with the scale-path authority
-    ordering. Oracle: the recurrence unrolled as chained CTEs with the
+    driver-side graph state. Reference parity: the static config-order
+    frontier of reference Coordinator/main.py:34-61, upgraded with the
+    scale-path authority ordering. Oracle: the recurrence unrolled as chained CTEs with the
     identical integer arithmetic."""
     edges = _host_link_edges(spark, sf_dir)
     nodes = (
@@ -10146,18 +10146,19 @@ def snapshot_retention_audit(spark, sf_dir):
     """,
 )
 def wap_publish_audit(spark, sf_dir):
-    """Write-audit-publish ledger for ``Table.write_branch`` /
-    ``publish_branch`` / ``drop_branch`` (catalog.py) — the accounting
-    an operator reads after a day of staged epoch commits: per table,
-    how many batches were staged on audit branches, how many passed the
-    quality gate (error-rate ≤ 15‰, integer cross-multiplied so Spark
-    and DuckDB agree bit-exactly) and fast-forwarded into main, how
-    many were quarantined with their row mass, and how many publishes
-    hit the fast-forward conflict path (staging overlapped a
-    just-published batch — ``publish_branch``'s main-advanced abort —
-    and had to re-stage).  The staging log is synthesized
+    """Write-audit-publish ledger — the accounting an operator of an
+    Iceberg-style WAP flow (stage a batch on an audit branch, gate it,
+    fast-forward main or quarantine it) reads after a day of staged
+    epoch commits: per table, how many batches were staged, how many
+    passed the quality gate (error-rate ≤ 15‰, integer cross-multiplied
+    so Spark and DuckDB agree bit-exactly) and fast-forwarded into main,
+    how many were quarantined with their row mass, and how many
+    publishes hit the fast-forward conflict path (staging overlapped a
+    just-published batch, so main had advanced past the fork, and the
+    batch had to re-stage).  The staging log is synthesized
     deterministically from orders (batch order = o_orderkey per
-    table).  Plan: one pruned scan, one lag window per table, one
+    table); the engine's own catalog keeps one snapshot lineage and
+    has no branches.  Plan: one pruned scan, one lag window per table, one
     rollup — the ledger is one row per staged batch, bounded by commit
     count not corpus size.  Reference analog: the staged-upload commit
     barrier (reference vmCrawl.py upload path, SURVEY.md §2.1
@@ -12196,9 +12197,9 @@ def trustrank_seed_propagation(spark, sf_dir):
     localCheckpoint-cut lineage — O(k) shuffles, no driver-side graph
     state, O(hosts) rows only (never O(URLs)).  Downstream the
     crawl-scheduler consumes tr3 exactly like pr3/katz3: a
-    broadcast-sized host-priority dim.  Reference parity:
-    /root/reference/gen.py's static config-order frontier, upgraded
-    with trust-biased authority ordering."""
+    broadcast-sized host-priority dim.  Reference parity: the static
+    config-order frontier of reference Coordinator/main.py:34-61,
+    upgraded with trust-biased authority ordering."""
     edges = _host_link_edges(spark, sf_dir)
     nodes = (
         edges.select(F.col("src").alias("host"))

@@ -87,19 +87,6 @@ def session_counts(events: DataFrame, gap: str = "30 minutes",
     )
 
 
-def host_throughput(fetch_log: DataFrame) -> DataFrame:
-    """Per-host fetch outcome counters from a streaming fetch_log —
-    the live view of the checkpoint lineage counters."""
-    return (
-        fetch_log.groupBy("canonical_host")
-        .agg(
-            F.count("*").alias("fetched"),
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-            F.sum(F.when(F.col("status") == "ERR", 1).otherwise(0)).alias("err"),
-        )
-    )
-
-
 SEEN_OUT_SCHEMA = (
     "key string, canonical_host string, epoch int, attempt int, "
     "shuffle_rank long, status string, exetime double"
