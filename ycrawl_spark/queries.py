@@ -5323,8 +5323,8 @@ def pagerank_host_priority(spark, sf_dir):
     lineage localCheckpoint-cut per round — O(k) shuffles, no
     driver-side graph state. Reference parity: the static config-order
     frontier of reference Coordinator/main.py:34-61, upgraded with the
-    scale-path authority ordering. Oracle: the recurrence unrolled as chained CTEs with the
-    identical integer arithmetic."""
+    scale-path authority ordering. Oracle: the recurrence unrolled as
+    chained CTEs with the identical integer arithmetic."""
     edges = _host_link_edges(spark, sf_dir)
     nodes = (
         edges.select(F.col("src").alias("host"))
